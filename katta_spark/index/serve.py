@@ -30,7 +30,10 @@ O(query-term posting blocks), independent of corpus size.
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
 import json
+import time
 from pathlib import Path
 
 import numpy as np
@@ -246,33 +249,39 @@ class QueryTimeout(TimeoutError):
 #: hundred microseconds of block work
 _DEADLINE_STRIDE = 32
 
-#: process-wide kernel deadline for a scatter WORKER — armed by
-#: _deadline_task around a budgeted shard task so a runaway scan
-#: aborts inside the worker (freeing it for the shard's next query)
-#: even though the task functions don't thread a deadline through
-_WORKER_DEADLINE: float | None = None
+#: kernel deadline (monotonic seconds) of the query running in THIS
+#: context — armed by _budget() for a timed LocalSearcher call and by
+#: _deadline_task for a budgeted scatter call.  A ContextVar, so one
+#: thread's budget never reaches another thread's query on the same
+#: handle.
+_DEADLINE: contextvars.ContextVar[float | None] = contextvars.ContextVar(
+    "katta_query_deadline", default=None
+)
 
 
-def _check_deadline(deadline: float | None, i: int) -> None:
-    if deadline is None:
-        deadline = _WORKER_DEADLINE
-    if deadline is not None and (i % _DEADLINE_STRIDE) == 0:
-        import time
+@contextlib.contextmanager
+def _budget(timeout_ms: float | None):
+    """Arm the kernel deadline at 75% of the client budget for the
+    duration of one call — the reference's fraction
+    (LuceneServer.java:435-437: the collector gets 75% of the client
+    timeout so the node can still serialize a reply inside it; client
+    budget LuceneClient.java:182).  ``None`` leaves the context's
+    deadline (if any) untouched."""
+    if timeout_ms is None:
+        yield
+        return
+    tok = _DEADLINE.set(time.monotonic() + 0.75 * float(timeout_ms) / 1000.0)
+    try:
+        yield
+    finally:
+        _DEADLINE.reset(tok)
 
-        if time.monotonic() > deadline:
+
+def _check_deadline(i: int) -> None:
+    if i % _DEADLINE_STRIDE == 0:
+        deadline = _DEADLINE.get()
+        if deadline is not None and time.monotonic() > deadline:
             raise QueryTimeout("query deadline exceeded in kernel")
-
-
-def _payload_dir(p) -> str:
-    """Every scatter payload leads with its shard's index dir."""
-    return p[0] if isinstance(p, tuple) else str(p)
-
-
-def _swap_payload_dir(p, d: str):
-    """Re-target a scatter payload at a replica dir (replicas hold
-    byte-identical shard content, so the rest of the payload —
-    offsets, merged catalog, query — carries over unchanged)."""
-    return (d,) + tuple(p[1:]) if isinstance(p, tuple) else d
 
 
 def _is_infra_failure(exc: BaseException) -> bool:
@@ -292,23 +301,16 @@ def _is_infra_failure(exc: BaseException) -> bool:
 
 
 def _deadline_task(args: tuple):
-    """Run a shard task with the worker-side kernel deadline armed at
-    75% of the client budget remaining at dispatch (the reference's
-    collector fraction) — see _scatter's failure policy."""
-    import time
-
+    """Run one scatter call with the worker-side kernel deadline armed
+    at 75% of the client budget remaining at dispatch (``None``: no
+    budget) — see _scatter's failure policy."""
     fn, payload, budget_ms = args
-    global _WORKER_DEADLINE
-    _WORKER_DEADLINE = time.monotonic() + 0.75 * float(budget_ms) / 1000.0
-    try:
+    with _budget(budget_ms):
         return fn(payload)
-    finally:
-        _WORKER_DEADLINE = None
 
 
 def _exhaustive_scan(blocks: pd.DataFrame, n_docs: float, avgdl: float,
-                     k1: float, b: float, block_range: int,
-                     deadline: float | None = None
+                     k1: float, b: float, block_range: int
                      ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(doc_id, score, nt) over every posting row — numpy-native
     mirror of make_exhaustive_kernel.  Score accumulation order is
@@ -324,7 +326,7 @@ def _exhaustive_scan(blocks: pd.DataFrame, n_docs: float, avgdl: float,
                 np.empty(0, np.int64))
     all_ids, all_scores = [], []
     for i in range(len(bids)):
-        _check_deadline(deadline, i)
+        _check_deadline(i)
         ids, tf, dl = codec.decode_block(
             gaps[i], tfs[i], dls[i], int(bids[i]), block_range
         )
@@ -342,8 +344,7 @@ def _exhaustive_scan(blocks: pd.DataFrame, n_docs: float, avgdl: float,
 
 def _wand_scan(blocks: pd.DataFrame, n_docs: float, avgdl: float,
                k1: float, b: float, block_range: int, k: int,
-               n_terms: int, mode: str, min_match: int | None = None,
-               deadline: float | None = None
+               n_terms: int, mode: str, min_match: int | None = None
                ) -> tuple[np.ndarray, np.ndarray]:
     """Block-max WAND top-k — numpy-native mirror of
     make_wand_kernel: per-row upper bounds are computed VECTORIZED
@@ -371,7 +372,7 @@ def _wand_scan(blocks: pd.DataFrame, n_docs: float, avgdl: float,
     top: tuple[np.ndarray, np.ndarray] | None = None
     threshold = -np.inf
     for gi, (s, e) in enumerate(zip(starts, ends)):
-        _check_deadline(deadline, gi)
+        _check_deadline(gi)
         if required > 1 and len(set(terms[s:e])) < required:
             continue
         if float(ub_v[s:e].sum()) < threshold:
@@ -413,32 +414,37 @@ class _ResultCache:
     final results (top-k lists / counts), never posting data, so a
     full cache is a few MB.  Invalidation is structural: refresh()
     re-runs __init__, which builds a fresh empty cache (the
-    new-searcher flush)."""
+    new-searcher flush).  A lock makes it safe to share across the
+    threads serving one handle."""
 
     _MISS = object()
 
     def __init__(self, maxsize: int = 256):
+        import threading
         from collections import OrderedDict
 
         self._d: "OrderedDict" = OrderedDict()
+        self._lock = threading.Lock()
         self.maxsize = int(maxsize)
         self.hits = 0
         self.misses = 0
 
     def get(self, key):
-        v = self._d.get(key, self._MISS)
-        if v is self._MISS:
-            self.misses += 1
-        else:
-            self.hits += 1
-            self._d.move_to_end(key)
-        return v
+        with self._lock:
+            v = self._d.get(key, self._MISS)
+            if v is self._MISS:
+                self.misses += 1
+            else:
+                self.hits += 1
+                self._d.move_to_end(key)
+            return v
 
     def put(self, key, val) -> None:
-        self._d[key] = val
-        self._d.move_to_end(key)
-        while len(self._d) > self.maxsize:
-            self._d.popitem(last=False)
+        with self._lock:
+            self._d[key] = val
+            self._d.move_to_end(key)
+            while len(self._d) > self.maxsize:
+                self._d.popitem(last=False)
 
 
 class LocalSearcher:
@@ -456,35 +462,14 @@ class LocalSearcher:
     # reference's getDocFreqs() exchange (LuceneServer.java:76-82)
     _df_override: dict[str, int] | None = None
     _cache_host: "LocalSearcher | None" = None
-    #: active kernel deadline (monotonic seconds) — set by _budget()
-    #: for the duration of one timed query; every scoring path funnels
-    #: through _scored / _wand_scan, which check it between block
-    #: decodes (TimeLimitingCollector parity)
-    _deadline: float | None = None
 
-    def _budget(self, timeout_ms: float | None):
-        """Context manager arming the kernel deadline at 75% of the
-        client budget — the reference's fraction
-        (LuceneServer.java:435-437: the collector gets 75% of the
-        client timeout so the node can still serialize a reply
-        inside it; client budget LuceneClient.java:182)."""
-        import contextlib
-        import time
-
-        @contextlib.contextmanager
-        def cm():
-            if timeout_ms is None:
-                yield
-                return
-            self._deadline = (
-                time.monotonic() + 0.75 * float(timeout_ms) / 1000.0
-            )
-            try:
-                yield
-            finally:
-                self._deadline = None
-
-        return cm()
+    @property
+    def _deadline(self) -> float | None:
+        """The kernel deadline armed in the calling context (None when
+        the running query has no budget) — every scoring path funnels
+        through _scored / _wand_scan, which check it between block
+        decodes (TimeLimitingCollector parity)."""
+        return _DEADLINE.get()
 
     def _checked_table(self, ds, columns=None, filter=None):
         """Stored-field / postings / catalog scan with deadline
@@ -497,7 +482,7 @@ class LocalSearcher:
         until the scan ended; this aborts it in-worker at the same
         75%-of-budget deadline.  With no deadline armed (the common
         case) it is ONE to_table call — zero overhead."""
-        if self._deadline is None and _WORKER_DEADLINE is None:
+        if self._deadline is None:
             return ds.to_table(columns=columns, filter=filter)
         import pyarrow as pa
 
@@ -505,7 +490,7 @@ class LocalSearcher:
                              batch_size=16384)
         batches = []
         for b in scanner.to_batches():
-            _check_deadline(self._deadline, 0)
+            _check_deadline(0)
             batches.append(b)
         return pa.Table.from_batches(
             batches, schema=scanner.projected_schema
@@ -653,10 +638,11 @@ class LocalSearcher:
 
     def _blocks(self, terms: list[str]) -> pd.DataFrame:
         """Posting blocks of the query terms + their global df —
-        one row-group-pruned read of postings, one of the catalog;
-        ordered (block_id, term) exactly like the Spark path's
-        sortWithinPartitions so the shared kernels see identical
-        group boundaries."""
+        one row-group-pruned read of postings, one of the catalog
+        (skipped for the terms a _global_view override already
+        carries); ordered (block_id, term) exactly like the Spark
+        path's sortWithinPartitions so the shared kernels see
+        identical group boundaries."""
         if not terms:
             return pd.DataFrame(columns=_BLOCK_COLS + ["df"])
         pred = pa_ds.field("term").isin(terms)
@@ -668,20 +654,14 @@ class LocalSearcher:
             # snapshot df: the global terms parquet spans ALL commits,
             # so the pinned catalog is the sum of the pinned blocks'
             # per-block doc counts (exactly the Spark tier's rule)
-            cat = pdf.groupby("term", as_index=False)["n"].sum().rename(
-                columns={"n": "df"}
+            cat = self._with_override(
+                pdf.groupby("term", as_index=False)["n"].sum().rename(
+                    columns={"n": "df"}
+                ), terms,
             )
             pdf = pdf.drop(columns=["n"])
         else:
-            cat = self._terms.to_table(
-                columns=["term", "df"], filter=pred
-            ).to_pandas()
-        if self._df_override is not None and len(cat):
-            # cross-shard scoring: the merged corpus-wide df REPLACES
-            # the shard-local df (terms the exchange missed keep the
-            # local value — a visible-fallback, never a crash)
-            ov = cat["term"].map(self._df_override)
-            cat["df"] = ov.fillna(cat["df"]).astype("int64")
+            cat = self._df_for(terms)
         out = pdf.merge(cat, on="term")
         return out.sort_values(["block_id", "term"],
                                kind="mergesort", ignore_index=True)
@@ -701,7 +681,7 @@ class LocalSearcher:
         ids, scores, nt = _exhaustive_scan(
             self._blocks(terms), float(self.stats["n_docs"]),
             self.stats["avgdl"], self.stats["k1"], self.stats["b"],
-            self.stats["block_range"], deadline=self._deadline,
+            self.stats["block_range"],
         )
         return self._mask_tomb(ids, scores, nt)
 
@@ -719,7 +699,7 @@ class LocalSearcher:
         Repeated queries hit the result cache (a timed-out query
         caches nothing — only completed results enter)."""
         def compute():
-            with self._budget(timeout_ms):
+            with _budget(timeout_ms):
                 terms = sorted(set(strip_stops(self.stats, qterms)))
                 if self._tomb is None:
                     ids, scores = _wand_scan(
@@ -727,7 +707,7 @@ class LocalSearcher:
                         self.stats["avgdl"], self.stats["k1"],
                         self.stats["b"], self.stats["block_range"],
                         offset + k, len(terms), mode,
-                        min_match=min_match, deadline=self._deadline,
+                        min_match=min_match,
                     )
                 else:
                     ids, scores, nt = self._scored(terms)
@@ -809,13 +789,21 @@ class LocalSearcher:
         (tested).  ``timeout_ms`` arms the 75% deadline over the
         postings AND stored-field scans (round-5 non-kernel deadline
         coverage)."""
-        with self._budget(timeout_ms):
-            ids = self._matched_ids(qterms, mode)
-            tbl = self._docs_subset(ids, [field])
-        cnt = tbl[field].value_counts(dropna=False)
-        items = [(None if pd.isna(v) else v, int(c))
-                 for v, c in cnt.items()]
+        with _budget(timeout_ms):
+            items = self._facet_counts(qterms, field, mode)
         return _facet_rank(items, n, missing, sort, prefix, mincount)
+
+    def _facet_counts(self, qterms: list[str], field: str,
+                      mode: str = "or") -> list[tuple[object, int]]:
+        """FULL (value, count) histogram of ``field`` over the match
+        set, the NULL bucket as value None — uncut, so a scatter's
+        per-value sums over disjoint doc sets are exact (the facet and
+        rare_terms unit)."""
+        ids = self._matched_ids(qterms, mode)
+        cnt = self._docs_subset(ids, [field])[field].value_counts(
+            dropna=False)
+        return [(None if pd.isna(v) else v, int(c))
+                for v, c in cnt.items()]
 
     def _matched_ids(self, qterms: list[str], mode: str = "or") -> np.ndarray:
         """Live matching doc_ids (sorted) — the non-scoring match set
@@ -889,7 +877,7 @@ class LocalSearcher:
         a stable multi-key sort.  Mirrors PhysicalIndex.sorted_query
         exactly, including Spark's null rule (asc -> nulls FIRST,
         desc -> nulls LAST) and the doc_id-asc tie-break (tested)."""
-        with self._budget(timeout_ms):
+        with _budget(timeout_ms):
             ids = self._matched_ids(qterms, mode)
             need = ["doc_id"] + sorted(
                 {c for c, _ in sort_cols}
@@ -911,7 +899,7 @@ class LocalSearcher:
         Mirrors PhysicalIndex.range_facet — same bucket_start values
         (start + floor((v-start)/gap)*gap), same [start, end) bounds,
         min_count applied after counting (tested)."""
-        with self._budget(timeout_ms):
+        with _budget(timeout_ms):
             hist = self._range_hist(qterms, field, start, end, gap, mode)
         rows = [(b, c) for b, c in sorted(hist.items())
                 if c >= int(min_count)]
@@ -983,11 +971,28 @@ class LocalSearcher:
         """has_child/ToParentBlockJoin score_mode group ranking at
         node latency — mirrors PhysicalIndex.group_score_topk
         (tested)."""
-        terms = sorted(set(strip_stops(self.stats, qterms)))
         return _gscore_finalize(
-            _gscore_partials(self, terms, group_field, mode),
+            self._gscore_partials(qterms, group_field, mode),
             group_field, score_mode, k,
         )
+
+    def _gscore_partials(self, qterms: list[str], field: str,
+                         mode: str = "or") -> pd.DataFrame:
+        """Per-group (n, sum, min, max) over per-hit scores rounded
+        6dp BEFORE aggregation (the Spark tier's rule, so accumulation
+        order can never flip ranks) — associative partials a scatter
+        merges exactly."""
+        ids, scores = self._scored_filtered(qterms, mode)
+        vals = self._doc_values(np.sort(ids), [field])
+        df = pd.DataFrame(
+            {"doc_id": ids, "score": np.round(scores, 6)}
+        ).merge(vals, on="doc_id")
+        g = df.groupby(field, dropna=False)["score"]
+        return pd.DataFrame({
+            field: g.size().index, "n": g.size().to_numpy(),
+            "sum_v": g.sum().to_numpy(), "min_v": g.min().to_numpy(),
+            "max_v": g.max().to_numpy(),
+        })
 
     def ngroups(self, qterms: list[str], group_field: str,
                 mode: str = "or") -> tuple[int, int]:
@@ -995,9 +1000,16 @@ class LocalSearcher:
         (distinct non-NULL group values among the matches, Spark's
         countDistinct rule).  Mirrors PhysicalIndex.ngroups
         (tested)."""
+        vals, n_hits = self._group_values(qterms, group_field, mode)
+        return len(vals), n_hits
+
+    def _group_values(self, qterms: list[str], group_field: str,
+                      mode: str = "or") -> tuple[list, int]:
+        """(distinct non-NULL group values, n_hits) over the match set
+        — value sets union and hit counts sum exactly across shards."""
         ids = self._matched_ids(qterms, mode)
         vals = self._doc_values(ids, [group_field])[group_field]
-        return int(vals.dropna().nunique()), int(ids.size)
+        return sorted(vals.dropna().unique().tolist()), int(ids.size)
 
     def expand_topk(self, qterms: list[str], collapse_field: str,
                     k: int = 10, n_expand: int = 2,
@@ -1047,16 +1059,23 @@ class LocalSearcher:
         set rides the bitset membership path; intersections are
         sorted-array intersects.  Mirrors
         PhysicalIndex.adjacency_matrix (tested)."""
+        return [(k1, k2, c) for k1, k2, c in self._adjacency_counts(
+            sorted(queries_map.items()), mode) if c]
+
+    def _adjacency_counts(self, qmap: list[tuple[str, list[str]]],
+                          mode: str = "or") -> list[tuple]:
+        """(key1, key2, cnt) for every filter and pairwise
+        intersection, zero pairs KEPT (another shard may fill them —
+        the scatter omits all-empty pairs after summation)."""
         items = [(label, self._matched_ids(terms, mode))
-                 for label, terms in sorted(queries_map.items())]
+                 for label, terms in qmap]
         out = []
         for i, (k1, s1) in enumerate(items):
             for k2, s2 in items[i:]:
                 c = (int(s1.size) if k1 == k2 else
                      int(np.intersect1d(s1, s2,
                                         assume_unique=True).size))
-                if c:
-                    out.append((k1, k2, c))
+                out.append((k1, k2, c))
         return out
 
     def diversified_sampler(self, qterms: list[str], key_field: str,
@@ -1086,12 +1105,8 @@ class LocalSearcher:
         value asc), NULLs excluded.  Exact (no CuckooFilter sketch
         needed node-side).  Mirrors PhysicalIndex.rare_terms
         (tested)."""
-        ids = self._matched_ids(qterms, mode)
-        tbl = self._docs_subset(ids, [field])
-        cnt = tbl[field].dropna().value_counts()
-        rows = [(v, int(c)) for v, c in cnt.items()
-                if c <= int(max_count)]
-        return sorted(rows, key=lambda x: (x[1], x[0]))[:n]
+        return _rare_rank(self._facet_counts(qterms, field, mode),
+                          max_count, n)
 
     def facet_stats(self, qterms: list[str], facet_field: str,
                     stat_field: str, mode: str = "or") -> pd.DataFrame:
@@ -1129,11 +1144,18 @@ class LocalSearcher:
         counted in EVERY containing interval.  One matched-values
         read, one numpy comparison per interval; rows label-asc.
         Mirrors PhysicalIndex.interval_facet (tested)."""
-        counts = _interval_counts(
-            self._matched_values(qterms, field, mode), intervals
-        )
+        counts = self._interval_partial(qterms, field, intervals, mode)
         return sorted(
             (str(iv[0]), c) for iv, c in zip(intervals, counts)
+        )
+
+    def _interval_partial(self, qterms: list[str], field: str,
+                          intervals: list[tuple],
+                          mode: str = "or") -> list[int]:
+        """Counts per interval IN INTERVAL ORDER — the positional unit
+        a scatter sums element-wise (duplicate labels stay distinct)."""
+        return _interval_counts(
+            self._matched_values(qterms, field, mode), intervals
         )
 
     def facet_queries(self, queries_map: dict[str, list[str]],
@@ -1255,35 +1277,50 @@ class LocalSearcher:
         """(term, df) for arbitrary terms under this handle's rules —
         the same catalog source _blocks uses: global terms parquet
         normally, per-block doc-count sums on a commit-pinned (PIT)
-        handle, the merged-catalog override under a scatter."""
-        if not terms:
-            return pd.DataFrame(columns=["term", "df"])
-        if len(terms) > 4096 and not self._commits:
+        handle, the merged-catalog override under a scatter (the
+        local catalog is then read only for the terms the override
+        lacks — a visible fallback, never a crash)."""
+        ov = self._df_override or {}
+        local = [t for t in terms if t not in ov]
+        cat = None
+        if len(local) > 4096 and not self._commits:
             # big-vocab path (significant_terms foregrounds): the
             # full two-column catalog read + a pandas hash filter
             # beats an isin scan filter with 10^5 values
             t = self._terms.to_table(columns=["term", "df"]).to_pandas()
-            cat = t[t["term"].isin(set(terms))].copy()
-            if self._df_override is not None and len(cat):
-                ov = cat["term"].map(self._df_override)
-                cat["df"] = ov.fillna(cat["df"]).astype("int64")
-            return cat
-        pred = pa_ds.field("term").isin(terms)
-        if self._commits:
+            cat = t[t["term"].isin(set(local))]
+        elif local and self._commits:
             pdf = self._postings.to_table(
-                columns=["term", "n"], filter=pred
+                columns=["term", "n"],
+                filter=pa_ds.field("term").isin(local),
             ).to_pandas()
             cat = pdf.groupby("term", as_index=False)["n"].sum().rename(
                 columns={"n": "df"}
             )
-        else:
+        elif local:
             cat = self._terms.to_table(
-                columns=["term", "df"], filter=pred
+                columns=["term", "df"],
+                filter=pa_ds.field("term").isin(local),
             ).to_pandas()
-        if self._df_override is not None and len(cat):
-            ov = cat["term"].map(self._df_override)
-            cat["df"] = ov.fillna(cat["df"]).astype("int64")
-        return cat
+        return self._with_override(cat, terms)
+
+    def _with_override(self, cat: pd.DataFrame | None,
+                       terms: list[str]) -> pd.DataFrame:
+        """``cat`` (local (term, df) rows, None when none were read)
+        with the cross-shard merged df wherever the _global_view
+        override has the term."""
+        ov = self._df_override
+        got = [t for t in terms if t in ov] if ov else []
+        if not got:
+            return pd.DataFrame(columns=["term", "df"]) if cat is None \
+                else cat
+        rows = pd.DataFrame({"term": got, "df": np.array(
+            [ov[t] for t in got], dtype=np.int64)})
+        if cat is not None and len(cat):
+            cat = cat[~cat["term"].isin(got)]
+            if len(cat):
+                return pd.concat([cat, rows], ignore_index=True)
+        return rows
 
     def _collapse_heads(self, qterms: list[str], field: str,
                         mode: str = "or") -> pd.DataFrame:
@@ -1578,7 +1615,7 @@ class LocalSearcher:
         ES sampler-agg analogue) — cost becomes O(max_fg) instead of
         O(match count); df_fg/lift are then unbiased estimates."""
         qset = sorted(set(strip_stops(self.stats, qterms)))
-        with self._budget(timeout_ms):
+        with _budget(timeout_ms):
             vc, n_fg = self._sigterms_fg(qterms, mode, max_fg=max_fg)
         return _sigterms_rank(vc, n_fg, qset, self._df_for,
                               float(self.stats["n_docs"]), m_terms,
@@ -1824,12 +1861,9 @@ class LocalSearcher:
         pdf = self._postings.to_table(
             columns=_POS_COLS, filter=pred
         ).to_pandas()
-        cat = self._terms.to_table(
+        cat = self._with_override(self._terms.to_table(
             columns=["term", "df"], filter=tpred
-        ).to_pandas()
-        if self._df_override is not None and len(cat):
-            ov = cat["term"].map(self._df_override)
-            cat["df"] = ov.fillna(cat["df"]).astype("int64")
+        ).to_pandas(), terms)
         blocks = pdf.merge(cat, on="term").sort_values(
             ["block_id", "term"], kind="mergesort", ignore_index=True
         )
@@ -1869,19 +1903,60 @@ class LocalSearcher:
         served without a cluster: the SAME parser (qparse) and the
         same boolean/scoring semantics as PhysicalIndex.query
         (rank-identity tested across the full syntax battery)."""
-        from katta_spark.fulltext.qparse import combine_q_fq
-
         def compute():
-            node = combine_q_fq(q, fq)
-            with self._budget(timeout_ms):
-                ids, scores = _LocalEval(self, synonyms).eval_query(node)
-            order = np.lexsort((ids, -scores))[offset:offset + k]
-            return [(int(ids[i]), float(scores[i])) for i in order]
+            with _budget(timeout_ms):
+                page = self._query_page(q, fq, synonyms, None, offset + k)
+            return page[offset:]
 
         key = ("query", q, int(k), int(offset), tuple(fq or ()),
                json.dumps(synonyms, sort_keys=True) if synonyms
                else None)
         return list(self._cached(key, compute))
+
+    def _query_terms(self, q: str, fq: list[str] | None,
+                     synonyms: dict[str, list[str]] | None
+                     ) -> tuple[list[tuple[str, int]], dict]:
+        """Collect phase of a cross-shard query — the getDocFreqs()
+        exchange (LuceneServer.java:76-82) generalized to the full
+        query grammar: this shard's (term, local df) rows for every
+        plain postings term the query scores, plus its catalog
+        matches for every wildcard/fuzzy/regex expansion, keyed by
+        the expansion's semantic identity."""
+        from katta_spark.fulltext.luceval import strip_stops_node
+        from katta_spark.fulltext.qparse import combine_q_fq
+
+        ev = _LocalEval(self, synonyms)
+        node = strip_stops_node(ev.stops, combine_q_fq(q, fq))
+        if node is None:
+            return [], {}
+        plain = _collect_plain_terms(self.stats, ev.fields, ev.analyzers,
+                                     ev.synonyms, node)
+        cat = self._df_for(sorted(plain))
+        rows = list(zip(cat["term"].tolist(), [int(x) for x in cat["df"]]))
+        exp: dict[tuple, list[tuple[str, int]]] = {}
+        for key, fld, matcher in _iter_expansions(ev.fields, node):
+            if key not in exp:
+                m = _catalog_match_rows(self._catalog(), fld, matcher)
+                exp[key] = list(zip(m["term"].astype(str).tolist(),
+                                    [int(x) for x in m["df"]]))
+        return rows, exp
+
+    def _query_page(self, q: str, fq: list[str] | None,
+                    synonyms: dict[str, list[str]] | None,
+                    pinned: dict[tuple, list[str]] | None,
+                    need: int) -> list[tuple[int, float]]:
+        """Evaluate phase: the top ``need`` (doc_id, score) of the
+        FULL q+fq AST on this handle (LuceneServer.search per node,
+        LuceneServer.java:661-690).  Under a scatter the handle is a
+        _global_view and ``pinned`` carries the cross-shard expansion
+        sets; exact per shard because shards own disjoint doc sets —
+        boolean algebra distributes over the disjoint union."""
+        from katta_spark.fulltext.qparse import combine_q_fq
+
+        ids, scores = _LocalEval(self, synonyms, pinned=pinned) \
+            .eval_query(combine_q_fq(q, fq))
+        order = np.lexsort((ids, -scores))[:need]
+        return [(int(ids[i]), float(scores[i])) for i in order]
 
     def search(self, qterms: list[str], k: int = 10, mode: str = "or",
                fields: list[str] | None = None,
@@ -1889,28 +1964,17 @@ class LocalSearcher:
         """One-call serving surface: hits + numFound + maxScore +
         qTime (QueryResponse.java:27-192 parity), optionally joined
         with stored fields."""
-        import time
-
         t0 = time.monotonic()
-        terms = sorted(set(strip_stops(self.stats, qterms)))
-        with self._budget(timeout_ms):
-            ids, scores, nt = self._scored(terms)
-        if mode == "and" and len(terms) > 1:
-            keep = nt == len(terms)
-            ids, scores = ids[keep], scores[keep]
-        order = np.lexsort((ids, -scores))[:k]
-        hits = [(int(ids[i]), float(scores[i])) for i in order]
-        if fields:
-            detail = self.fetch([d for d, _ in hits], fields)
-            detail["score"] = [s for _, s in hits]
-        else:
-            detail = pd.DataFrame(hits, columns=["doc_id", "score"])
-        return {
-            "hits": detail,
-            "num_found": int(ids.size),
-            "max_score": float(scores.max()) if ids.size else None,
-            "qtime_ms": int((time.monotonic() - t0) * 1000),
-        }
+        with _budget(timeout_ms):
+            # k or 1: a k=0 envelope still reports maxScore
+            page, n = self._search_page(qterms, max(k, 1), mode)
+        return _envelope(self, page, k, n, fields, t0)
+
+    def _search_page(self, qterms: list[str], k: int,
+                     mode: str = "or") -> tuple[list, int]:
+        """(top-k hits, live match count) — the search-envelope unit,
+        one call so a scatter answers both in one round."""
+        return self.topk(qterms, k, mode), self.count(qterms, mode)
 
 
 # ---------------------------------------------------------------------------
@@ -1990,25 +2054,6 @@ def _fmetric_finalize(parts: pd.DataFrame, facet_field: str,
     ).head(int(n))
     out["cnt"] = out["cnt"].astype("int64")
     return out.reset_index(drop=True)
-
-
-def _gscore_partials(handle: "LocalSearcher", terms: list[str],
-                     field: str, mode: str) -> pd.DataFrame:
-    """Per-group (n, sum, min, max) over per-hit scores rounded 6dp
-    BEFORE aggregation (the Spark tier's rule, so accumulation order
-    can never flip ranks) — associative partials a scatter merges
-    exactly."""
-    ids, scores = handle._scored_filtered(terms, mode)
-    vals = handle._doc_values(np.sort(ids), [field])
-    df = pd.DataFrame(
-        {"doc_id": ids, "score": np.round(scores, 6)}
-    ).merge(vals, on="doc_id")
-    g = df.groupby(field, dropna=False)["score"]
-    return pd.DataFrame({
-        field: g.size().index, "n": g.size().to_numpy(),
-        "sum_v": g.sum().to_numpy(), "min_v": g.min().to_numpy(),
-        "max_v": g.max().to_numpy(),
-    })
 
 
 def _gscore_finalize(parts: pd.DataFrame, field: str,
@@ -2124,6 +2169,28 @@ def _facet_rank(items: list[tuple], n: int, missing: bool, sort: str,
     return sorted(rows, key=key)[:n]
 
 
+def _interval_counts(vals: np.ndarray,
+                     intervals: list[tuple]) -> list[int]:
+    """Counts per interval IN INTERVAL ORDER (not label-sorted) — the
+    positional unit both tiers share, so the scatter merge can sum
+    element-wise and duplicate labels stay distinct rows."""
+    out = []
+    for _label, lo, hi, lo_incl, hi_incl in intervals:
+        c = (vals >= lo) if lo_incl else (vals > lo)
+        c &= (vals <= hi) if hi_incl else (vals < hi)
+        out.append(int(np.count_nonzero(c)))
+    return out
+
+
+def _rare_rank(items: list[tuple], max_count: int, n: int) -> list[tuple]:
+    """ES rare_terms cut of a (value, count) histogram: non-NULL
+    buckets with cnt <= max_count, (cnt asc, value asc), top n —
+    shared by both node tiers."""
+    rows = [(v, c) for v, c in items
+            if v is not None and c <= int(max_count)]
+    return sorted(rows, key=lambda x: (x[1], x[0]))[:n]
+
+
 def _sigterms_rank(vc: pd.Series, n_fg: int, qset: list[str],
                    df_for, n_docs: float, m_terms: int,
                    min_df: int) -> pd.DataFrame:
@@ -2195,6 +2262,27 @@ def _highlight_frame(fetch_fn, hits: list[tuple[int, float]],
         rows.append((d, s, pat.sub(rf"{pre}\1{post}", snippet)
                      if pat else snippet))
     return pd.DataFrame(rows, columns=["doc_id", "score", "snippet"])
+
+
+def _envelope(src, page: list[tuple[int, float]], k: int, n: int,
+              fields: list[str] | None, t0: float) -> dict:
+    """The search envelope (QueryResponse.java:27-192 parity): the
+    first ``k`` of ``page`` as hits — joined with stored fields
+    through ``src.fetch`` when asked — numFound ``n``, maxScore (the
+    page's head: the best score over the whole match set) and qTime
+    since ``t0``.  Shared by both node tiers."""
+    hits = page[:k]
+    if fields:
+        detail = src.fetch([d for d, _ in hits], fields)
+        detail["score"] = [s for _, s in hits]
+    else:
+        detail = pd.DataFrame(hits, columns=["doc_id", "score"])
+    return {
+        "hits": detail,
+        "num_found": int(n),
+        "max_score": page[0][1] if page else None,
+        "qtime_ms": int((time.monotonic() - t0) * 1000),
+    }
 
 
 def _empty_res() -> Res:
@@ -2545,365 +2633,73 @@ def _shard_handle(d: str) -> "LocalSearcher":
     return s
 
 
-def _shard_blocks_for(s: "LocalSearcher", off: int, terms: list[str],
-                      cat_rows: list[tuple], block_range: int
-                      ) -> pd.DataFrame:
-    """One shard's namespaced posting blocks carrying the GLOBAL df
-    (block_id shifts by the shard offset, so the gap decode emits
-    namespaced doc ids with no re-encode)."""
-    pdf = s._postings.to_table(
-        columns=_BLOCK_COLS, filter=pa_ds.field("term").isin(terms)
-    ).to_pandas()
-    pdf["block_id"] = pdf["block_id"] + off // block_range
-    cat = pd.DataFrame(cat_rows, columns=["term", "df"])
-    return pdf.merge(cat, on="term").sort_values(
-        ["block_id", "term"], kind="mergesort", ignore_index=True
-    )
-
-
-def _shard_topk_task(payload: tuple) -> tuple[np.ndarray, np.ndarray]:
-    """Per-shard top-k — runs INSIDE a worker process (the node)."""
-    d, off, p = payload
+def _shard_call(payload: tuple):
+    """THE scatter worker entry point — one per-shard RPC, run inside a
+    pool worker process (the node).  ``payload`` is ``(dir, offset,
+    method, args, view)``: open (or reuse) the shard's cached
+    :class:`LocalSearcher`, overlay corpus-wide scoring stats when a
+    ``view`` = (n_docs, avgdl, {term: df}) rides along (the
+    getDocFreqs() exchange — a :meth:`LocalSearcher._global_view`),
+    and return ``method(*args)``.  Replies carry shard-LOCAL doc ids;
+    the client adds ``offset``."""
+    d, _off, method, args, view = payload
     s = _shard_handle(d)
-    blocks = _shard_blocks_for(s, off, p["terms"], p["cat"],
-                               p["block_range"])
-    if s._tomb is None:
-        return _wand_scan(
-            blocks, p["n_docs"], p["avgdl"], p["k1"], p["b"],
-            p["block_range"], p["k"], len(p["terms"]), p["mode"],
-            min_match=p["min_match"],
-        )
-    ids, sc, nt = _exhaustive_scan(
-        blocks, p["n_docs"], p["avgdl"], p["k1"], p["b"],
-        p["block_range"])
-    keep = ~np.isin(ids, s._tomb + off)
-    ids, sc, nt = ids[keep], sc[keep], nt[keep]
-    req = (len(p["terms"]) if p["mode"] == "and"
-           else max(1, int(p["min_match"] or 1)))
-    if req > 1:
-        m = nt >= req
-        ids, sc = ids[m], sc[m]
-    return ids, sc
+    if view is not None:
+        s = s._global_view(*view)
+    return getattr(s, method)(*args)
 
 
-def _shard_facet_task(payload: tuple) -> list[tuple[object, int]]:
-    """Per-shard FULL value histogram over the match set — runs
-    inside a worker process; local doc ids suffice (values, not ids,
-    travel back)."""
-    d, _off, p = payload
-    s = _shard_handle(d)
-    ids, _, nt = _exhaustive_scan(
-        _shard_blocks_for(s, 0, p["terms"], p["cat"], p["block_range"]),
-        p["n_docs"], p["avgdl"], p["k1"], p["b"], p["block_range"])
-    if s._tomb is not None and ids.size:
-        keep = ~np.isin(ids, s._tomb)
-        ids, nt = ids[keep], nt[keep]
-    if p["mode"] == "and" and len(p["terms"]) > 1:
-        ids = ids[nt == len(p["terms"])]
-    ids = np.sort(ids)
-    tbl = s._docs_subset(ids, [p["field"]])
-    cnt = tbl[p["field"]].value_counts(dropna=False)
-    return [(None if pd.isna(v) else v, int(c))
-            for v, c in cnt.items()]
+def _merge_hits(parts: list[tuple[int, list]], start: int,
+                stop: int | None) -> list[tuple[int, float]]:
+    """Shift each shard's (doc_id, score) page by its doc-id offset,
+    merge in the reference's Hit.compareTo order (score desc,
+    namespaced doc_id asc) and cut [start, stop)."""
+    hits = [(d + off, s) for off, page in parts for d, s in page]
+    hits.sort(key=lambda h: (-h[1], h[0]))
+    return hits[start:stop]
 
 
-def _shard_count_task(payload: tuple) -> int:
-    """Per-shard live-match count — runs inside a worker process.
-    Counting needs NO df exchange (idf never changes membership), so
-    each shard answers from its own doc-id bitsets; the client just
-    sums (shards own disjoint doc sets)."""
-    d, p = payload
-    return _shard_handle(d).count_raw(p["terms"], p["mode"])
-
-
-def _shard_sorted_task(payload: tuple) -> pd.DataFrame:
-    """Per-shard field-sorted top rows — runs inside a worker
-    process.  Field sorting needs NO df exchange (membership is
-    idf-free), so the scatter is one round; the shard returns its
-    own top (offset+limit) rows INCLUDING the sort columns so the
-    client-side merge re-applies the same comparator."""
-    d, off, p = payload
-    out = _shard_handle(d).sorted_query(
-        p["terms"], p["sort_cols"], p["cols"], p["k"], mode=p["mode"],
-    )
-    out["doc_id"] = out["doc_id"] + off
-    return out
-
-
-def _shard_range_task(payload: tuple):
-    """Per-shard FULL range histogram (numeric gap buckets or date
-    units) / other=all triple — min_count is applied client-side
-    AFTER summation so mid-ranked buckets can never be undercut."""
-    d, _off, p = payload
-    s = _shard_handle(d)
-    if p["kind"] == "date":
-        return s._date_hist(p["terms"], p["field"], p["unit"], p["mode"])
-    if p["kind"] == "other":
-        return s.range_facet_other(
-            p["terms"], p["field"], p["start"], p["end"], p["mode"]
-        )
-    return s._range_hist(
-        p["terms"], p["field"], p["start"], p["end"], p["gap"], p["mode"]
-    )
-
-
-def _shard_grouping_task(payload: tuple) -> pd.DataFrame:
-    """Per-shard grouping unit — runs inside a worker process.  The
-    shard scores with the merged-catalog dfs (a _global_view overlay:
-    the getDocFreqs exchange), so per-shard heads/ranks are already
-    on the corpus-wide score scale and the client merge is a pure
-    re-sort.  op=collapse returns the FULL per-value head map
-    (bounded by value cardinality — the merge can never miss a
-    group's true head); op=group returns per-value top k_per_group
-    (a global per-group top-k is a top-k of the union of per-shard
-    per-group top-ks)."""
-    d, off, p = payload
-    s = _shard_handle(d)
-    v = s._global_view(p["n_docs"], p["avgdl"], dict(p["cat"]))
-    if p["op"] == "collapse":
-        out = v._collapse_heads(p["terms"], p["field"], p["mode"])
-        out = out[["doc_id", "score", p["field"]]]
-    else:
-        out = v.group_topk(p["terms"], p["field"], p["k_per_group"],
-                           p["mode"])
-    out = out.copy()
-    out["doc_id"] = out["doc_id"] + off
-    return out
-
-
-def _shard_spell_task(payload: tuple) -> pd.DataFrame:
-    """Per-shard FULL spell candidate set — pure-Python levenshtein
-    over the shard's whole term catalog, i.e. exactly the CPU-bound
-    work the GIL serializes under threads, so it runs in the
-    process pool."""
-    d, _off, p = payload
-    return _shard_handle(d)._spell_candidates(p["word"], p["max_edits"])
-
-
-def _shard_stats_task(payload: tuple) -> tuple:
-    """Per-shard (n, min, max, sum) stats partial — pandas/numpy
-    CPU, process pool."""
-    d, _off, p = payload
-    return _shard_handle(d)._stats_partial(p["terms"], p["field"],
-                                           p["mode"])
-
-
-def _shard_pivot_task(payload: tuple) -> pd.DataFrame:
-    """Per-shard FULL (field1, field2) histogram — pandas CPU,
-    process pool."""
-    d, _off, p = payload
-    return _shard_handle(d)._pivot_pairs(p["terms"], p["field1"],
-                                         p["field2"], p["mode"])
-
-
-def _interval_counts(vals: np.ndarray,
-                     intervals: list[tuple]) -> list[int]:
-    """Counts per interval IN INTERVAL ORDER (not label-sorted) — the
-    positional unit both tiers share, so the scatter merge can sum
-    element-wise and duplicate labels stay distinct rows."""
-    out = []
-    for _label, lo, hi, lo_incl, hi_incl in intervals:
-        c = (vals >= lo) if lo_incl else (vals > lo)
-        c &= (vals <= hi) if hi_incl else (vals < hi)
-        out.append(int(np.count_nonzero(c)))
-    return out
-
-
-def _shard_interval_task(payload: tuple) -> list[int]:
-    """Per-shard facet.interval counts, interval order — numpy CPU,
-    process pool."""
-    d, _off, p = payload
-    s = _shard_handle(d)
-    return _interval_counts(
-        s._matched_values(p["terms"], p["field"], p["mode"]),
-        p["intervals"],
-    )
-
-
-def _shard_suggest_task(payload: tuple) -> pd.DataFrame:
-    """Per-shard FULL regex/infix suggester candidates — Python
-    regex CPU over the catalog, process pool."""
-    d, _off, p = payload
-    return _shard_handle(d)._suggest_candidates(p["kind"], p["arg"])
-
-
-def _shard_fmetric_task(payload: tuple) -> pd.DataFrame:
-    """Per-shard facet-by-metric partials — pandas CPU, process
-    pool."""
-    d, _off, p = payload
-    return _shard_handle(d)._fmetric_partials(
-        p["terms"], p["facet_field"], p["metric_field"], p["mode"]
-    )
-
-
-def _shard_gscore_task(payload: tuple) -> pd.DataFrame:
-    """Per-shard group-score partials on the corpus-wide score scale
-    (a _global_view overlay carries the merged-catalog dfs)."""
-    d, _off, p = payload
-    s = _shard_handle(d)
-    v = s._global_view(p["n_docs"], p["avgdl"], dict(p["cat"]))
-    return _gscore_partials(v, p["terms"], p["field"], p["mode"])
-
-
-def _shard_ngroups_task(payload: tuple) -> tuple[list, int]:
-    """Per-shard (distinct non-NULL group values, n_hits)."""
-    d, _off, p = payload
-    s = _shard_handle(d)
-    ids = s._matched_ids(p["terms"], p["mode"])
-    vals = s._doc_values(ids, [p["field"]])[p["field"]]
-    return sorted(vals.dropna().unique().tolist()), int(ids.size)
-
-
-def _shard_adjacency_task(payload: tuple) -> list[tuple]:
-    """Per-shard adjacency matrix (labels pre-stripped) — bitset
-    match sets + sorted intersects, process pool.  Zero pairs are
-    kept here (another shard may fill them); the client omits
-    all-empty pairs after summation."""
-    d, _off, p = payload
-    s = _shard_handle(d)
-    items = [(label, s._matched_ids(terms, p["mode"]))
-             for label, terms in p["qmap"]]
-    out = []
-    for i, (k1, s1) in enumerate(items):
-        for k2, s2 in items[i:]:
-            c = (int(s1.size) if k1 == k2 else
-                 int(np.intersect1d(s1, s2, assume_unique=True).size))
-            out.append((k1, k2, c))
-    return out
-
-
-def _shard_facet_stats_task(payload: tuple) -> pd.DataFrame:
-    """Per-shard stats.facet partials — pandas CPU, process pool."""
-    d, _off, p = payload
-    return _shard_handle(d)._facet_stats_partials(
-        p["terms"], p["facet_field"], p["stat_field"], p["mode"]
-    )
-
-
-def _shard_search_task(payload: tuple):
-    """Per-shard search-envelope unit: the shard's top-k page AND its
-    bitset match count in ONE scatter round (LocalSearcher.search
-    derives numFound from the same pass for the same reason)."""
-    ids, sc = _shard_topk_task(payload)
-    d, _off, p = payload
-    n = _shard_handle(d).count_raw(p["terms"], p["mode"])
-    return ids, sc, n
-
-
-def _shard_facet_queries_task(payload: tuple) -> list[tuple[str, int]]:
-    """Per-shard facet.query counts for ALL labels in ONE scatter
-    round (each label rides the bitset count path)."""
-    d, _off, p = payload
-    s = _shard_handle(d)
-    return [(label, s.count(terms, p["mode"]))
-            for label, terms in p["qmap"]]
-
-
-def _shard_sigterms_task(payload: tuple):
-    """Per-shard significant_terms foreground: (pa.Table (term,
-    df_fg), n_fg) — disjoint doc sets, so the client-side sums are
-    exact.  The histogram travels back as a pyarrow Table (pickled
-    via Arrow IPC buffers — columnar, no per-string cost) and the
-    client merges with an Arrow group-by.  Background dfs come from
-    a second (threaded, pyarrow-only) merged-catalog read over the
-    union foreground vocabulary."""
-    d, _off, p = payload
-    s = _shard_handle(d)
-    return s._sigterms_fg_tbl(p["terms"], p["mode"],
-                              max_fg=p.get("max_fg"),
-                              shard_min_df=p.get("shard_min_df", 1),
-                              shard_size=p.get("shard_size"))
-
-
-def _parse_stripped(s: "LocalSearcher", q, fq):
-    """Parse q+fq and apply this index's stopword rewrite — shared by
-    both query-scatter phases so they see the SAME tree."""
-    from katta_spark.fulltext.luceval import strip_stops_node
-    from katta_spark.fulltext.qparse import combine_q_fq
-
-    node = combine_q_fq(q, fq)
-    return strip_stops_node(set(s.stats.get("stopwords") or []), node)
-
-
-def _shard_collect_task(payload: tuple):
-    """Phase 1 of the cross-shard query — the getDocFreqs() exchange
-    (LuceneServer.java:76-82) generalized to the full query grammar:
-    this shard's (term, local df) rows for every plain postings term
-    the query scores, plus its catalog matches for every
-    wildcard/fuzzy/regex expansion.  Runs inside a worker process
-    (fuzzy matching is Python CPU over the whole catalog)."""
-    d, _off, p = payload
-    s = _shard_handle(d)
-    node = _parse_stripped(s, p["q"], p["fq"])
-    if node is None:
-        return [], {}
-    fields = set(s.stats.get("indexed_fields", []))
-    analyzers = s.stats.get("field_analyzers", {})
-    src = (p["synonyms"] if p["synonyms"] is not None
-           else s.stats.get("synonyms") or {})
-    synonyms = {k.lower(): sorted({x.lower() for x in v})
-                for k, v in src.items()}
-    plain = _collect_plain_terms(s.stats, fields, analyzers, synonyms, node)
-    rows: list[tuple[str, int]] = []
-    if plain:
-        cat = s._terms.to_table(
-            columns=["term", "df"],
-            filter=pa_ds.field("term").isin(sorted(plain)),
-        ).to_pandas()
-        rows = list(zip(cat["term"].tolist(), [int(x) for x in cat["df"]]))
-    exp: dict[tuple, list[tuple[str, int]]] = {}
-    for key, fld, matcher in _iter_expansions(fields, node):
-        if key in exp:
-            continue
-        m = _catalog_match_rows(s._catalog(), fld, matcher)
-        exp[key] = list(zip(m["term"].astype(str).tolist(),
-                            [int(x) for x in m["df"]]))
-    return rows, exp
-
-
-def _shard_query_task(payload: tuple) -> tuple[np.ndarray, np.ndarray]:
-    """Phase 2 — evaluate the FULL q+fq AST on this shard with global
-    stats/dfs and pinned expansions (LuceneServer.search per node,
-    LuceneServer.java:661-690).  Exact per shard because shards own
-    disjoint doc sets: boolean algebra distributes over the disjoint
-    union, so the per-shard result IS the union-index result
-    restricted to this shard's docs.  Returns the shard's top
-    (offset+k) only — sufficient for the global cut, tiny IPC."""
-    d, off, p = payload
-    s = _shard_handle(d)
-    view = s._global_view(p["n_docs"], p["avgdl"], dict(p["df_map"]))
-    node = _parse_stripped(s, p["q"], p["fq"])
-    if node is None:
-        return np.empty(0, np.int64), np.empty(0, np.float64)
-    ids, scores = _LocalEval(view, p["synonyms"],
-                             pinned=p["pinned"]).eval_query(node)
-    order = np.lexsort((ids, -scores))[:p["need"]]
-    return ids[order] + off, scores[order]
+def _shift_ids(parts: list[tuple[int, pd.DataFrame]]) -> list[pd.DataFrame]:
+    """Each shard's reply frame with its doc_id column moved into the
+    namespaced id space."""
+    return [f.assign(doc_id=f["doc_id"] + off) for off, f in parts]
 
 
 class ShardedSearcher:
     """Katta CLIENT scatter-gather, node-side: one query handle over
     MANY shard index directories (the reference client expands index
     patterns to shard sets and fans a query out —
-    katta-client/.../client/Client.java:672-703 — after a global
-    doc-frequency exchange, ``getDocFreqs()``
-    LuceneServer.java:76-82, so every shard scores with corpus-wide
-    idf).
+    katta-client/.../client/Client.java:672-703 — one RPC per shard
+    to a node that runs its own searcher, then merges the replies).
 
-    Here the df exchange is a per-query merge of the shards' term
-    catalogs (summed df overrides each shard's local df column before
-    the kernels run), doc/block ids namespace by the same cumulative
-    block-aligned offsets as ``PhysicalIndex.open_many``, and the
-    merged posting blocks run through the SHARED kernels — so the
-    ranking is identical to a single index built over the union of
-    the corpora, and identical to the Spark tier's open_many handle
-    (both tested).
+    Dispatch contract: every surface is one round of per-shard calls
+    (two for ``query``) through the single worker entry point
+    :func:`_shard_call`.  A call names a :class:`LocalSearcher`
+    method and its args.  Where scores depend on idf it also carries
+    a global VIEW — (n_docs, avgdl, {term: df}) with dfs summed over
+    the shards' term catalogs, the reference's ``getDocFreqs()``
+    exchange (LuceneServer.java:76-82) — so each shard scores with
+    corpus-wide idf.  Replies carry shard-local doc ids; the client
+    adds the shard's block-aligned offset (the namespacing of
+    ``PhysicalIndex.open_many``) and merges per surface: hit pages by
+    (score desc, doc_id asc), histograms and partials by summation
+    over disjoint doc sets, candidate sets by df sums.  The ranking
+    is identical to one index built over the union of the corpora,
+    and to the Spark tier's open_many handle (both tested).
+
+    Only topk, search, query, more_like_this and the scored grouping
+    surfaces (collapse_topk, group_topk, group_score_topk) pay the df
+    exchange.  Membership is idf-free, so count, facet, rare_terms,
+    sorted_query, the range/date/interval facets, the stats / pivot /
+    facet_stats / facet_by_metric partials, facet_queries,
+    adjacency_matrix, ngroups and the significant_terms foreground
+    skip it; the suggesters and spellcheck read catalogs only.
 
     100 TB shape: per-shard reads stay term-pruned (row-group stats),
-    the merge is O(query terms × shards) catalog rows + the posting
-    blocks of the query terms only; shards can live on different
-    machines behind any RPC fan-out — this class is the per-node
-    compute each of them runs plus the client-side merge."""
+    the exchange is O(query terms × shards) catalog rows; shards can
+    live on different machines behind any RPC fan-out — this class is
+    the client-side fan-out and merge, the per-shard compute is the
+    node's own LocalSearcher."""
 
     def __init__(self, dirs: list[str], timeout_ms: float | None = None,
                  complete: bool = True,
@@ -2940,8 +2736,10 @@ class ShardedSearcher:
             str(k): [str(x) for x in v]
             for k, v in (replicas or {}).items()
         }
-        #: shard dirs that failed/timed out in the LAST scatter —
-        #: reset per query; feeds the search() envelope
+        #: shard dirs that failed/timed out in the LAST scatter — the
+        #: public record; queries read their OWN call's failures
+        #: (_scatter returns them), so concurrent queries never see
+        #: each other's
         self.shards_failed: list[str] = []
         # lifetime scatter counters (metrics())
         self._n_scatters = 0
@@ -2949,6 +2747,7 @@ class ShardedSearcher:
         self._n_failures = 0
         self._n_failovers = 0
         self._fo_lock = threading.Lock()
+        self._pool_lock = threading.Lock()
         #: scatter-tier result cache (round 5): repeated identical
         #: scatters skip fan-out + merge entirely.  Keys include the
         #: per-shard COMMIT FINGERPRINTS, so a replica promotion or a
@@ -2990,9 +2789,9 @@ class ShardedSearcher:
         )
     def close(self) -> None:
         """Shut down the scatter worker pool (safe to call twice)."""
-        if getattr(self, "_pool", None) is not None:
-            self._pool.shutdown(wait=False, cancel_futures=True)
-            self._pool = None
+        pool, self._pool = getattr(self, "_pool", None), None
+        if pool is not None:
+            pool.shutdown(wait=False, cancel_futures=True)
 
     def refresh(self) -> "ShardedSearcher":
         """Reopen every shard AND restart the scatter pool: forked
@@ -3032,32 +2831,41 @@ class ShardedSearcher:
         import os
         from concurrent.futures import ProcessPoolExecutor
 
-        if getattr(self, "_pool", None) is None:
-            n_workers = min(len(self.shards), os.cpu_count() or 8)
-            self._pool = ProcessPoolExecutor(
-                max_workers=n_workers,
-                mp_context=mp.get_context("fork"),
-                initializer=_worker_cap_threads,
-                initargs=(n_workers,),
-            )
-        return self._pool
+        with self._pool_lock:
+            pool = getattr(self, "_pool", None)
+            if pool is None:
+                n_workers = min(len(self.shards), os.cpu_count() or 8)
+                pool = self._pool = ProcessPoolExecutor(
+                    max_workers=n_workers,
+                    mp_context=mp.get_context("fork"),
+                    initializer=_worker_cap_threads,
+                    initargs=(n_workers,),
+                )
+            return pool
 
-    def _scatter(self, task_fn, payloads: list,
-                 timeout_ms: float | None = None) -> list:
-        """Fan a per-shard task out to a PROCESS pool — the honest
-        one-node-per-shard model (a Katta node is its own JVM): the
-        per-shard work is small-array numpy/pandas that the GIL
-        serializes under threads (measured 15x CONVOY slowdown with a
-        thread pool), so real parallelism needs real processes.  The
-        forked workers cache a LocalSearcher per shard dir across
-        queries; results (top-k arrays / counts) are tiny, so IPC
-        cost is microseconds.  Single shard runs inline (no budget).
+    def _scatter(self, payloads: list[tuple],
+                 timeout_ms: float | None = None
+                 ) -> tuple[list[tuple[int, object]], list[str]]:
+        """Dispatch one :func:`_shard_call` payload per shard to a
+        PROCESS pool — the honest one-node-per-shard model (a Katta
+        node is its own JVM): the per-shard work is small-array
+        numpy/pandas that the GIL serializes under threads (measured
+        15x CONVOY slowdown with a thread pool), so real parallelism
+        needs real processes.  The forked workers cache a
+        LocalSearcher per shard dir across queries; replies (hit
+        pages / counts / partials) are small, so IPC cost is
+        microseconds.  Single shard runs inline (no budget).
+
+        Returns ``([(offset, reply)], failed)``: the answering shards'
+        replies in payload order, each with its shard's doc-id
+        offset, and the dirs of the shards that failed in THIS call
+        (also published as ``self.shards_failed``).
 
         Failure policy (NodeInteraction.java:141-205 +
         ClientResultReceiver.java:147-166), by failure class:
 
         - DEAD worker (BrokenProcessPool, e.g. OOM-kill): the pool is
-          rebuilt and that shard's task re-dispatched ONCE; twice-dead
+          rebuilt and that shard's call re-dispatched ONCE; twice-dead
           drops from the merge (or raises under ``complete=True``).
         - TIMEOUT: dropped, never retried (it would just time out
           again inside the same budget).  When a budget is set the
@@ -3067,16 +2875,16 @@ class ShardedSearcher:
           next queries behind it and cascade timeouts onto healthy
           requests (with-budget test covers the return path; the
           worker-side abort mirrors LuceneServer's collector).
-        - TASK EXCEPTION (bad query, unknown field, in-kernel
+        - CALL EXCEPTION (bad query, unknown field, in-kernel
           QueryTimeout): deterministic — never retried, never tears
           the healthy pool down; raised immediately under
           ``complete=True``, dropped under ``complete=False``.
 
         REPLICA FAILOVER (NodeInteraction.java:141-205): when the
         handle carries replica dirs for a shard, a DEAD-worker retry
-        that dies again, an infra task failure (unreadable/corrupt
-        copy — :func:`_is_infra_failure`), or a TIMEOUT with budget
-        remaining re-dispatches the shard's task to the next replica
+        that dies again, an infra failure (unreadable/corrupt copy —
+        :func:`_is_infra_failure`), or a TIMEOUT with budget
+        remaining re-dispatches the shard's call to the next replica
         instead of failing it; the shard joins ``shards_failed`` only
         when every replica is exhausted.  A replica that answers is
         promoted for subsequent queries (failed copies leave the
@@ -3086,30 +2894,35 @@ class ShardedSearcher:
         (Solr shards.tolerant does the same): there is no meaningful
         partial result, and returning [] would push confusing
         empty-concat errors into every merge surface."""
-        import time
         from concurrent.futures import TimeoutError as FutTimeout
         from concurrent.futures.process import BrokenProcessPool
 
         budget = self.timeout_ms if timeout_ms is None else timeout_ms
-        self.shards_failed = []
+        failed: list[str] = []
+        self.shards_failed = failed
         self._n_scatters += 1
         cur = list(payloads)
-        reps = {i: list(self.replicas.get(_payload_dir(p), []))
+        reps = {i: list(self.replicas.get(p[0], []))
                 for i, p in enumerate(payloads)}
+
+        def failover(i: int) -> None:
+            # replicas hold byte-identical shard content, so only the
+            # dir changes — offset, method, args and view carry over
+            self._n_failovers += 1
+            cur[i] = (reps[i].pop(0), *cur[i][1:])
+
         if len(payloads) == 1 and budget is None:
             # inline fast path — still replica-aware
             while True:
                 try:
-                    out = [task_fn(cur[0])]
+                    out = _shard_call(cur[0])
                 except Exception as e:
                     if _is_infra_failure(e) and reps[0]:
-                        self._n_failovers += 1
-                        cur[0] = _swap_payload_dir(cur[0],
-                                                   reps[0].pop(0))
+                        failover(0)
                         continue
                     raise
                 self._promote_successes(payloads, cur, reps, {0: None})
-                return out
+                return [(cur[0][1], out)], failed
         deadline = (None if budget is None
                     else time.monotonic() + float(budget) / 1000.0)
         results: dict[int, object] = {}
@@ -3122,13 +2935,9 @@ class ShardedSearcher:
             left_ms = (None if deadline is None else
                        max(0.0, (deadline - time.monotonic()) * 1000.0))
             try:
-                if left_ms is None:
-                    futs = {i: pool.submit(task_fn, cur[i])
-                            for i in pending}
-                else:
-                    futs = {i: pool.submit(
-                        _deadline_task, (task_fn, cur[i], left_ms))
-                        for i in pending}
+                futs = {i: pool.submit(
+                    _deadline_task, (_shard_call, cur[i], left_ms))
+                    for i in pending}
             except BrokenProcessPool:
                 self.close()
                 if rnd == max_rounds - 1:
@@ -3150,7 +2959,7 @@ class ShardedSearcher:
                     if _is_infra_failure(e):
                         err_infra[i] = e
                     else:
-                        # deterministic task failure: no retry, pool
+                        # deterministic call failure: no retry, pool
                         # is healthy — do NOT tear it down (the
                         # workers' warm shard-handle caches survive)
                         if first_exc is None:
@@ -3164,15 +2973,13 @@ class ShardedSearcher:
                 # a replica attempt needs real budget left to be
                 # worth dispatching
                 if reps[i] and (lf is None or lf > 0.05):
-                    self._n_failovers += 1
-                    cur[i] = _swap_payload_dir(cur[i], reps[i].pop(0))
+                    failover(i)
                     nxt.append(i)
                 else:
                     failed_now.append(i)
             for i, e in err_infra.items():
                 if reps[i]:
-                    self._n_failovers += 1
-                    cur[i] = _swap_payload_dir(cur[i], reps[i].pop(0))
+                    failover(i)
                     nxt.append(i)
                 else:
                     if first_exc is None:
@@ -3188,8 +2995,7 @@ class ShardedSearcher:
                 elif reps[i]:
                     # twice-dead on this copy: next replica (which
                     # gets its own single dead-worker retry)
-                    self._n_failovers += 1
-                    cur[i] = _swap_payload_dir(cur[i], reps[i].pop(0))
+                    failover(i)
                     pool_dead_once.discard(i)
                     nxt.append(i)
                 else:
@@ -3199,37 +3005,36 @@ class ShardedSearcher:
             # mark BEFORE any complete=True raise so shards_failed,
             # _n_failures and metrics() stay consistent across all
             # failure classes
-            self._mark_failed(failed_now, payloads)
+            self._mark_failed(failed_now, payloads, failed)
             if err_det and self.complete:
                 raise first_exc
             pending = nxt
             if not pending:
                 break
         if pending:
-            self._mark_failed(pending, payloads)
+            self._mark_failed(pending, payloads, failed)
         self._promote_successes(payloads, cur, reps, results)
-        if self.shards_failed and self.complete:
+        if failed and self.complete:
             if first_exc is not None and not isinstance(
                     first_exc, BrokenProcessPool):
                 raise first_exc
-            raise TimeoutError(
-                f"shards failed within budget: {self.shards_failed}"
-            )
+            raise TimeoutError(f"shards failed within budget: {failed}")
         if payloads and not results:
             raise TimeoutError(
-                f"all shards failed within budget: {self.shards_failed}"
+                f"all shards failed within budget: {failed}"
             )
-        return [results[i] for i in sorted(results)]
+        return [(payloads[i][1], results[i]) for i in sorted(results)], failed
 
     def metrics(self) -> dict:
         """Scatter-client counters + per-shard node metrics — the
         client-side view of the reference's node metrics registry.
         Lifetime counters survive refresh().  ``per_shard`` reads
-        THIS process's shard handles (the inline / single-shard
-        path); scattered queries run in forked workers whose own
-        result caches are per-worker-process and not aggregated
-        here — worker cache behavior is measured by the loadtest's
-        serve tier, not this snapshot."""
+        THIS process's shard handles, which serve the parent-side
+        reads (df exchange, suggest, fetch, term vectors) and the
+        inline single-shard path.  Every other per-shard call runs
+        through :func:`_shard_call` in a forked pool worker with its
+        own shard handles and result caches, which this snapshot does
+        not aggregate."""
         return {
             "shards_total": len(self.shards),
             "n_scatters": self._n_scatters,
@@ -3243,17 +3048,16 @@ class ShardedSearcher:
             "per_shard": [s.node_metrics() for s in self.shards],
         }
 
-    def _mark_failed(self, idxs: list[int], payloads: list) -> None:
-        # every scatter payload leads with its shard's index_dir, so
-        # the payload itself names the failed shard (payload lists
-        # are not always 1:1 with self.shards — e.g. the evaluation
-        # round of query() excludes shards that missed the df
-        # exchange)
+    def _mark_failed(self, idxs: list[int], payloads: list,
+                     failed: list[str]) -> None:
+        # every payload leads with its shard's index_dir, so the
+        # payload itself names the failed shard (payload lists are
+        # not always 1:1 with self.shards — e.g. the evaluation round
+        # of query() excludes shards that missed the df exchange)
         for i in idxs:
-            p = payloads[i]
-            d = p[0] if isinstance(p, tuple) else str(p)
-            if d not in self.shards_failed:
-                self.shards_failed.append(d)
+            d = payloads[i][0]
+            if d not in failed:
+                failed.append(d)
                 self._n_failures += 1
 
     def _sfingerprint(self) -> tuple:
@@ -3273,18 +3077,19 @@ class ShardedSearcher:
     def _scached(self, key: tuple, compute):
         """Scatter-tier queryResultCache wrapper: a hit skips the
         whole fan-out + merge (rank-identical by construction — the
-        key pins query AND per-shard state).  PARTIAL results are
-        never cached: a later retry must re-scatter, not replay the
-        degraded answer."""
+        key pins query AND per-shard state).  ``compute`` returns
+        (result, failed shard dirs of its own scatters); PARTIAL
+        results are never cached: a later retry must re-scatter, not
+        replay the degraded answer."""
         if self._scache is None:
-            return compute()
+            return compute()[0]
         full_key = (self._sfingerprint(), key)
         hit = self._scache.get(full_key)
         if hit is not self._scache._MISS:
             self.shards_failed = []
             return hit
-        out = compute()
-        if not self.shards_failed:
+        out, failed = compute()
+        if not failed:
             self._scache.put(full_key, out)
         return out
 
@@ -3296,7 +3101,7 @@ class ShardedSearcher:
         rotation (the reference's node-selection policy removes
         failed nodes, ShuffleNodeSelectionPolicy.java:25-40)."""
         for i in results:
-            od, nd = _payload_dir(payloads[i]), _payload_dir(cur[i])
+            od, nd = payloads[i][0], cur[i][0]
             if nd != od:
                 self._promote(od, nd, reps[i])
 
@@ -3352,23 +3157,35 @@ class ShardedSearcher:
                 self._n_failovers += 1
                 self._promote(s.index_dir, alts[0], alts[1:])
 
+    def _read_shards(self, fn) -> list:
+        """Parent-side read of every shard's files (df exchange,
+        suggest): pure pyarrow scans, which DO parallelize under
+        threads, each replica-aware through :meth:`_robust_read`."""
+        if len(self.shards) == 1:
+            return [self._robust_read(0, fn)]
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(
+            max_workers=min(len(self.shards), 32)
+        ) as ex:
+            return list(ex.map(lambda j: self._robust_read(j, fn),
+                               range(len(self.shards))))
+
     def _merged_cat(self, terms: list[str]) -> pd.DataFrame:
         """The getDocFreqs() exchange: per-shard catalog reads for
-        the query terms (pure pyarrow scans — these DO parallelize
-        under threads), df summed corpus-wide.  Past a few thousand
+        the query terms, df summed corpus-wide.  Past a few thousand
         terms (a significant_terms foreground vocabulary, not a
         query) the isin scan filter costs more than the data: read
         the full two-column catalog and hash-filter in pandas
         instead — measured the difference at 4M docs where the
         big-vocab exchange dominated the scatter."""
-        big = len(terms) > 4096
-        if big:
+        if len(terms) > 4096:
             import pyarrow as pa
             import pyarrow.compute as pc
 
             vset = pa.array(sorted(set(terms)))
 
-            def one(s: "LocalSearcher"):
+            def one(s: "LocalSearcher") -> pd.DataFrame:
                 t = s._terms.to_table(columns=["term", "df"])
                 return t.filter(
                     pc.is_in(t["term"], value_set=vset)
@@ -3380,37 +3197,37 @@ class ShardedSearcher:
                 return s._terms.to_table(
                     columns=["term", "df"], filter=pred).to_pandas()
 
-        if len(self.shards) == 1:
-            cats = [self._robust_read(0, one)]
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                max_workers=min(len(self.shards), 32)
-            ) as ex:
-                cats = list(ex.map(
-                    lambda j: self._robust_read(j, one),
-                    range(len(self.shards)),
-                ))
+        cats = self._read_shards(one)
         return pd.concat(cats).groupby("term", as_index=False)["df"].sum()
 
-    def _payloads(self, terms: list[str], cat: pd.DataFrame,
-                  extra: dict) -> list[tuple]:
-        base = {
-            "terms": terms,
-            "cat": list(zip(cat["term"].tolist(),
-                            [int(x) for x in cat["df"]])),
-            "n_docs": float(self.stats["n_docs"]),
-            "avgdl": self.stats["avgdl"],
-            "k1": self.stats["k1"],
-            "b": self.stats["b"],
-            "block_range": self.stats["block_range"],
-            **extra,
-        }
-        return [
-            (s.index_dir, off, base)
-            for s, off in zip(self.shards, self.offsets)
-        ]
+    def _view(self, cat: pd.DataFrame) -> tuple:
+        """A dispatcher view from a merged catalog: (n_docs, avgdl,
+        {term: corpus-wide df}) — what a shard's _global_view scores
+        with."""
+        return (float(self.stats["n_docs"]), self.stats["avgdl"],
+                dict(zip(cat["term"].tolist(),
+                         (int(x) for x in cat["df"]))))
+
+    def _calls(self, method: str, *args, view: tuple | None = None,
+               shards: list[int] | None = None) -> list[tuple]:
+        """One :func:`_shard_call` payload per shard (or per listed
+        shard index): ``(dir, offset, method, args, view)``."""
+        idx = range(len(self.shards)) if shards is None else shards
+        return [(self.shards[j].index_dir, self.offsets[j], method,
+                 args, view) for j in idx]
+
+    def _fan(self, method: str, *args, view: tuple | None = None,
+             timeout_ms: float | None = None):
+        """Scatter ``method(*args)`` to every shard —
+        ``([(offset, reply)], failed)``, see :meth:`_scatter`."""
+        return self._scatter(self._calls(method, *args, view=view),
+                             timeout_ms=timeout_ms)
+
+    def _replies(self, method: str, *args,
+                 view: tuple | None = None) -> list:
+        """The answering shards' replies alone — for merges that need
+        neither doc-id offsets nor the call's failure list."""
+        return [r for _, r in self._fan(method, *args, view=view)[0]]
 
     def topk(self, qterms: list[str], k: int = 10, mode: str = "or",
              min_match: int | None = None, offset: int = 0,
@@ -3419,25 +3236,16 @@ class ShardedSearcher:
         WAND heaps (each shard keeps its own threshold, its own
         process) merged client-side by (score desc, doc_id asc) (the
         reference's scatter + Hit.compareTo merge), corpus-wide idf
-        via the merged catalog, namespaced doc ids."""
+        via the df exchange, namespaced doc ids."""
         terms = sorted(set(strip_stops(self.stats, qterms)))
 
         def compute():
-            cat = self._merged_cat(terms)
-            pairs = self._scatter(
-                _shard_topk_task,
-                self._payloads(terms, cat, {
-                    "k": offset + k, "mode": mode,
-                    "min_match": min_match,
-                }),
+            parts, failed = self._fan(
+                "topk", list(qterms), offset + k, mode, min_match,
+                view=self._view(self._merged_cat(terms)),
                 timeout_ms=timeout_ms,
             )
-            if not pairs:
-                return []
-            ids = np.concatenate([p[0] for p in pairs])
-            scores = np.concatenate([p[1] for p in pairs])
-            order = np.lexsort((ids, -scores))[offset:offset + k]
-            return [(int(ids[i]), float(scores[i])) for i in order]
+            return _merge_hits(parts, offset, offset + k), failed
 
         key = ("topk", tuple(terms), int(k), mode, min_match,
                int(offset))
@@ -3450,21 +3258,22 @@ class ShardedSearcher:
               ) -> list[tuple[int, float]]:
         """Full Lucene-syntax q+fq scattered across ALL shards — the
         reference's primary search RPC (Client.java:562-649 scatter;
-        LuceneServer.java:661-690 parse+search per node), previously
-        single-shard only.
+        LuceneServer.java:661-690 parse+search per node).
 
-        Two scatter rounds: (1) the df exchange — each shard reports
-        local dfs for the query's plain terms and its catalog matches
-        for every wildcard/fuzzy/regex expansion; the client sums dfs
-        per term (disjoint doc sets) and unions the expansion sets;
-        (2) evaluation — each shard runs the SAME boolean evaluator
-        with global n_docs/avgdl/dfs and the pinned expansions, and
-        returns its top (offset+k).  The merge is the reference's
-        Hit.compareTo order (score desc, namespaced doc_id asc).
-        Rank-identical to LocalSearcher.query on the union-built
-        index and PhysicalIndex.query on the open_many handle
-        (tested).  Per-query work is O(query-term posting blocks) per
-        shard, in parallel — never corpus-size.
+        Two scatter rounds: (1) the df exchange
+        (``LocalSearcher._query_terms``) — each shard reports local
+        dfs for the query's plain terms and its catalog matches for
+        every wildcard/fuzzy/regex expansion; the client sums dfs per
+        term (disjoint doc sets) and unions the expansion sets;
+        (2) evaluation (``LocalSearcher._query_page``) — each shard
+        runs the SAME boolean evaluator under the global view with
+        the pinned expansions, and returns its top (offset+k).  The
+        merge is the reference's Hit.compareTo order (score desc,
+        namespaced doc_id asc).  Rank-identical to
+        LocalSearcher.query on the union-built index and
+        PhysicalIndex.query on the open_many handle (tested).
+        Per-query work is O(query-term posting blocks) per shard, in
+        parallel — never corpus-size.
 
         ``timeout_ms`` (or the handle default) spans BOTH scatter
         rounds — one client budget, like the reference's single RPC
@@ -3476,73 +3285,49 @@ class ShardedSearcher:
         df exchange is excluded from the evaluation round too: its
         dfs are absent from the merged catalog, so letting it score
         round 2 would rank with inconsistent idf."""
-        import time
 
         def compute():
             budget = (self.timeout_ms if timeout_ms is None
                       else timeout_ms)
             t_end = (None if budget is None
                      else time.monotonic() + float(budget) / 1000.0)
-
-            def left():
-                return (None if t_end is None else
-                        max(0.0, (t_end - time.monotonic()) * 1000.0))
-
-            p1 = {"q": q, "fq": fq, "synonyms": synonyms}
-            payloads = [(s.index_dir, off, p1)
-                        for s, off in zip(self.shards, self.offsets)]
+            parts, failed = self._fan(
+                "_query_terms", q, fq, synonyms,
+                timeout_ms=None if budget is None else float(budget) / 2.0,
+            )
             df_map: dict[str, int] = {}
             pinned: dict[tuple, set[str]] = {}
-            r1_budget = (None if budget is None
-                         else float(budget) / 2.0)
-            return self._query_rounds(q, k, offset, payloads, df_map,
-                                      pinned, left, r1_budget)
+            for _, (rows, exp) in parts:
+                # dedupe within the shard first: a term can be BOTH a
+                # plain query term and an expansion match (query
+                # `import im*`) — its local df must count exactly once
+                local = dict(rows)
+                for key, trs in exp.items():
+                    bucket = pinned.setdefault(key, set())
+                    for t, d in trs:
+                        bucket.add(t)
+                        local[t] = d
+                for t, d in local.items():
+                    df_map[t] = df_map.get(t, 0) + d
+            alive = [j for j, s in enumerate(self.shards)
+                     if s.index_dir not in failed]
+            view = (float(self.stats["n_docs"]), self.stats["avgdl"],
+                    df_map)
+            parts, failed2 = self._scatter(
+                self._calls("_query_page", q, fq, synonyms,
+                            {key: sorted(v) for key, v in pinned.items()},
+                            offset + k, view=view, shards=alive),
+                timeout_ms=(None if t_end is None else
+                            max(0.0, (t_end - time.monotonic()) * 1000.0)),
+            )
+            failed = failed + [d for d in failed2 if d not in failed]
+            self.shards_failed = failed
+            return _merge_hits(parts, offset, offset + k), failed
 
         key = ("query", q, int(k), int(offset), tuple(fq or ()),
                json.dumps(synonyms, sort_keys=True) if synonyms
                else None)
         return list(self._scached(key, compute))
-
-    def _query_rounds(self, q, k, offset, payloads, df_map, pinned,
-                      left, r1_budget):
-        for rows, exp in self._scatter(_shard_collect_task, payloads,
-                                       timeout_ms=r1_budget):
-            # dedupe within the shard first: a term can be BOTH a
-            # plain query term and an expansion match (query
-            # `import im*`) — its local df must count exactly once
-            local = dict(rows)
-            for key, trs in exp.items():
-                bucket = pinned.setdefault(key, set())
-                for t, d in trs:
-                    bucket.add(t)
-                    local[t] = d
-            for t, d in local.items():
-                df_map[t] = df_map.get(t, 0) + d
-        p2 = {
-            **payloads[0][2],
-            "df_map": sorted(df_map.items()),
-            "pinned": {key: sorted(v) for key, v in pinned.items()},
-            "n_docs": float(self.stats["n_docs"]),
-            "avgdl": self.stats["avgdl"],
-            "need": offset + k,
-        }
-        failed1 = list(self.shards_failed)
-        alive = [(s, off) for s, off in zip(self.shards, self.offsets)
-                 if s.index_dir not in failed1]
-        pairs = self._scatter(
-            _shard_query_task,
-            [(s.index_dir, off, p2) for s, off in alive],
-            timeout_ms=left(),
-        )
-        for d in failed1:
-            if d not in self.shards_failed:
-                self.shards_failed.append(d)
-        if not pairs:
-            return []
-        ids = np.concatenate([p[0] for p in pairs])
-        scores = np.concatenate([p[1] for p in pairs])
-        order = np.lexsort((ids, -scores))[offset:offset + k]
-        return [(int(ids[i]), float(scores[i])) for i in order]
 
     def count(self, qterms: list[str], mode: str = "or",
               timeout_ms: float | None = None) -> int:
@@ -3559,14 +3344,22 @@ class ShardedSearcher:
         terms = sorted(set(strip_stops(self.stats, qterms)))
 
         def compute():
-            return sum(self._scatter(
-                _shard_count_task,
-                [(s.index_dir, {"terms": terms, "mode": mode})
-                 for s in self.shards],
-                timeout_ms=timeout_ms,
-            ))
+            parts, failed = self._fan("count_raw", terms, mode,
+                                      timeout_ms=timeout_ms)
+            return sum(n for _, n in parts), failed
 
         return self._scached(("count", tuple(terms), mode), compute)
+
+    def _value_counts(self, qterms: list[str], field: str,
+                      mode: str) -> list[tuple[object, int]]:
+        """Per-shard FULL value histograms summed over disjoint doc
+        sets — the facet / rare_terms unit (membership only, so no df
+        exchange)."""
+        total: dict = {}
+        for part in self._replies("_facet_counts", qterms, field, mode):
+            for v, c in part:
+                total[v] = total.get(v, 0) + c
+        return list(total.items())
 
     def facet(self, qterms: list[str], field: str, n: int = 10,
               mode: str = "or", missing: bool = False,
@@ -3582,18 +3375,8 @@ class ShardedSearcher:
         histogram, not a truncated page.  Solr facet options
         (missing/sort/prefix/mincount) apply at the merge — exact,
         since the full histograms are present."""
-        terms = sorted(set(strip_stops(self.stats, qterms)))
-        cat = self._merged_cat(terms)
-        counts = self._scatter(
-            _shard_facet_task,
-            self._payloads(terms, cat, {"mode": mode, "field": field}),
-        )
-        total: dict = {}
-        for c in counts:
-            for v, k in c:
-                total[v] = total.get(v, 0) + k
-        return _facet_rank(list(total.items()), n, missing, sort,
-                           prefix, mincount)
+        return _facet_rank(self._value_counts(qterms, field, mode), n,
+                           missing, sort, prefix, mincount)
 
     def sorted_query(self, qterms: list[str],
                      sort_cols: list[tuple[str, str]],
@@ -3609,20 +3392,14 @@ class ShardedSearcher:
         doc sets — the global top (offset+limit) rows are each in
         their shard's top (offset+limit).  One scatter round (no df
         exchange: membership is idf-free)."""
-        terms = sorted(set(strip_stops(self.stats, qterms)))
         cols = ["doc_id"] + sorted(
             {c for c, _ in sort_cols}
             | {f for f in fields if f != "doc_id"}
         )
-        frames = self._scatter(
-            _shard_sorted_task,
-            [(s.index_dir, off, {
-                "terms": terms, "sort_cols": sort_cols, "cols": cols,
-                "k": offset + limit, "mode": mode,
-            }) for s, off in zip(self.shards, self.offsets)],
-        )
-        merged = _field_sort(pd.concat(frames, ignore_index=True),
-                             sort_cols)
+        parts, _ = self._fan("sorted_query", qterms, sort_cols, cols,
+                             offset + limit, 0, mode)
+        merged = _field_sort(pd.concat(_shift_ids(parts),
+                                       ignore_index=True), sort_cols)
         return merged.iloc[offset:offset + limit][list(fields)] \
             .reset_index(drop=True)
 
@@ -3634,16 +3411,9 @@ class ShardedSearcher:
         histograms summed over disjoint doc sets, min_count applied
         ONCE after summation — exact by construction, same argument
         as the value-facet merge."""
-        terms = sorted(set(strip_stops(self.stats, qterms)))
-        hists = self._scatter(_shard_range_task, [
-            (s.index_dir, 0, {
-                "kind": "num", "terms": terms, "field": field,
-                "start": float(start), "end": float(end),
-                "gap": float(gap), "mode": mode,
-            }) for s in self.shards
-        ])
         total: dict[float, int] = {}
-        for h in hists:
+        for h in self._replies("_range_hist", qterms, field, float(start),
+                               float(end), float(gap), mode):
             for b, c in h.items():
                 total[b] = total.get(b, 0) + c
         return [(float(b), int(c)) for b, c in sorted(total.items())
@@ -3655,13 +3425,8 @@ class ShardedSearcher:
         """facet.range.other=all across shards: per-shard (before,
         between, after) triples summed — exact over disjoint doc
         sets."""
-        terms = sorted(set(strip_stops(self.stats, qterms)))
-        triples = self._scatter(_shard_range_task, [
-            (s.index_dir, 0, {
-                "kind": "other", "terms": terms, "field": field,
-                "start": float(start), "end": float(end), "mode": mode,
-            }) for s in self.shards
-        ])
+        triples = self._replies("range_facet_other", qterms, field,
+                                float(start), float(end), mode)
         return (
             sum(t[0] for t in triples),
             sum(t[1] for t in triples),
@@ -3674,15 +3439,8 @@ class ShardedSearcher:
         """Scatter-gather date facetByRange (DateRangeFactory
         buckets, DateRangeFactory.java:43-77): per-shard full
         calendar-unit histograms summed, min_count after the sum."""
-        terms = sorted(set(strip_stops(self.stats, qterms)))
-        hists = self._scatter(_shard_range_task, [
-            (s.index_dir, 0, {
-                "kind": "date", "terms": terms, "field": field,
-                "unit": unit, "mode": mode,
-            }) for s in self.shards
-        ])
         total: dict = {}
-        for h in hists:
+        for h in self._replies("_date_hist", qterms, field, unit, mode):
             for b, c in h.items():
                 total[b] = total.get(b, 0) + c
         return [(b, int(c)) for b, c in sorted(total.items())
@@ -3694,14 +3452,8 @@ class ShardedSearcher:
         """Scatter-gather facet.interval, EXACT: per-shard interval
         counts summed over disjoint doc sets (membership is idf-free,
         one round on the process pool)."""
-        terms = sorted(set(strip_stops(self.stats, qterms)))
-        rows = self._scatter(
-            _shard_interval_task,
-            [(s.index_dir, off,
-              {"terms": terms, "field": field,
-               "intervals": list(intervals), "mode": mode})
-             for s, off in zip(self.shards, self.offsets)],
-        )
+        rows = self._replies("_interval_partial", qterms, field,
+                             list(intervals), mode)
         sums = [sum(part[i] for part in rows)
                 for i in range(len(intervals))]
         return sorted(
@@ -3716,13 +3468,8 @@ class ShardedSearcher:
         hits (df exchange) — all four associative over disjoint doc
         sets — merged and ranked once."""
         terms = sorted(set(strip_stops(self.stats, qterms)))
-        cat = self._merged_cat(terms)
-        parts = self._scatter(
-            _shard_gscore_task,
-            self._payloads(terms, cat, {
-                "field": group_field, "mode": mode,
-            }),
-        )
+        parts = self._replies("_gscore_partials", qterms, group_field,
+                              mode, view=self._view(self._merged_cat(terms)))
         return _gscore_finalize(
             pd.concat(parts, ignore_index=True), group_field,
             score_mode, k,
@@ -3733,16 +3480,10 @@ class ShardedSearcher:
         """group.ngroups across shards: per-shard distinct value SETS
         (bounded by value cardinality) union exactly; hit counts sum
         over disjoint doc sets."""
-        terms = sorted(set(strip_stops(self.stats, qterms)))
-        rows = self._scatter(
-            _shard_ngroups_task,
-            [(s.index_dir, off,
-              {"terms": terms, "field": group_field, "mode": mode})
-             for s, off in zip(self.shards, self.offsets)],
-        )
         vals: set = set()
         n_hits = 0
-        for vset, n in rows:
+        for vset, n in self._replies("_group_values", qterms,
+                                     group_field, mode):
             vals.update(vset)
             n_hits += n
         return len(vals), n_hits
@@ -3781,23 +3522,16 @@ class ShardedSearcher:
         return _term_vectors_attach(tf, cat,
                                     float(self.stats["n_docs"]))
 
+
     def adjacency_matrix(self, queries_map: dict[str, list[str]],
                          mode: str = "or") -> list[tuple]:
         """ES adjacency_matrix across shards, EXACT: per-shard
         matrices (bitset match sets, one scatter round) summed over
         disjoint doc sets; a pair empty on one shard but matched on
         another survives, all-empty pairs are omitted."""
-        qmap = [
-            (label, sorted(set(strip_stops(self.stats, terms))))
-            for label, terms in sorted(queries_map.items())
-        ]
-        rows = self._scatter(
-            _shard_adjacency_task,
-            [(s.index_dir, off, {"qmap": qmap, "mode": mode})
-             for s, off in zip(self.shards, self.offsets)],
-        )
         total: dict = {}
-        for part in rows:
+        for part in self._replies("_adjacency_counts",
+                                  sorted(queries_map.items()), mode):
             for k1, k2, c in part:
                 total[(k1, k2)] = total.get((k1, k2), 0) + c
         return [(k1, k2, c)
@@ -3828,34 +3562,16 @@ class ShardedSearcher:
         unit as the value facet — a value locally rare on every shard
         but globally common can never slip under max_count), then one
         global filter + (cnt asc, value asc) cut."""
-        terms = sorted(set(strip_stops(self.stats, qterms)))
-        cat = self._merged_cat(terms)
-        counts = self._scatter(
-            _shard_facet_task,
-            self._payloads(terms, cat, {"mode": mode, "field": field}),
-        )
-        total: dict = {}
-        for part in counts:
-            for v, c in part:
-                if v is not None:
-                    total[v] = total.get(v, 0) + c
-        rows = [(v, c) for v, c in total.items()
-                if c <= int(max_count)]
-        return sorted(rows, key=lambda x: (x[1], x[0]))[:n]
+        return _rare_rank(self._value_counts(qterms, field, mode),
+                          max_count, n)
 
     def facet_stats(self, qterms: list[str], facet_field: str,
                     stat_field: str, mode: str = "or") -> pd.DataFrame:
         """Scatter-gather stats.facet, EXACT: per-shard per-value
         (n, min, max, sum) partials — associative over disjoint doc
         sets — merged and rounded once."""
-        terms = sorted(set(strip_stops(self.stats, qterms)))
-        parts = self._scatter(
-            _shard_facet_stats_task,
-            [(s.index_dir, off,
-              {"terms": terms, "facet_field": facet_field,
-               "stat_field": stat_field, "mode": mode})
-             for s, off in zip(self.shards, self.offsets)],
-        )
+        parts = self._replies("_facet_stats_partials", qterms,
+                              facet_field, stat_field, mode)
         return _facet_stats_finalize(
             pd.concat(parts, ignore_index=True), facet_field
         )
@@ -3866,82 +3582,49 @@ class ShardedSearcher:
         round (a per-label self.count would pay one pool round-trip
         per label); per-shard bitset counts sum over disjoint doc
         sets — zero rows kept, label-asc."""
-        qmap = [
-            (label, sorted(set(strip_stops(self.stats, terms))))
-            for label, terms in sorted(queries_map.items())
-        ]
-        rows = self._scatter(
-            _shard_facet_queries_task,
-            [(s.index_dir, off, {"qmap": qmap, "mode": mode})
-             for s, off in zip(self.shards, self.offsets)],
-        )
-        total: dict = {label: 0 for label, _ in qmap}
-        for part in rows:
+        total: dict = {label: 0 for label in queries_map}
+        for part in self._replies("facet_queries", dict(queries_map),
+                                  mode):
             for label, c in part:
                 total[label] += c
         return sorted(total.items())
 
     def suggest(self, prefix: str, n: int = 10) -> list[tuple[str, int]]:
         """Scatter-gather autocomplete: per-shard prefix slices of
-        the term catalogs (threaded — pure pyarrow scans), dfs summed
-        per term (disjoint doc sets), one global (df desc, term asc)
-        cut — identical to the union index's suggest (tested)."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        the term catalogs (parent-side threaded reads — pure pyarrow
+        scans), dfs summed per term (disjoint doc sets), one global
+        (df desc, term asc) cut — identical to the union index's
+        suggest (tested)."""
         p = prefix.lower()
         pred = (pa_ds.field("term") >= p) & (pa_ds.field("term") < p + "￿")
-
-        def one(s: LocalSearcher) -> pd.DataFrame:
-            return s._terms.to_table(
+        cat = pd.concat(self._read_shards(
+            lambda s: s._terms.to_table(
                 columns=["term", "df"], filter=pred
             ).to_pandas()
-
-        if len(self.shards) == 1:
-            cats = [self._robust_read(0, one)]
-        else:
-            with ThreadPoolExecutor(
-                max_workers=min(len(self.shards), 32)
-            ) as ex:
-                cats = list(ex.map(
-                    lambda j: self._robust_read(j, one),
-                    range(len(self.shards)),
-                ))
-        cat = pd.concat(cats)
+        ))
         keep = cat["term"].str.startswith(p)
         if ":" not in p:
             keep &= ~cat["term"].str.contains(":", regex=False)
         merged = cat[keep].groupby("term", as_index=False)["df"].sum()
-        rows = sorted(
-            zip(merged["term"], merged["df"]),
-            key=lambda x: (-int(x[1]), x[0]),
-        )[:n]
-        return [(str(t), int(d)) for t, d in rows]
+        return _suggest_rank(merged, n)
 
     def suggest_regex(self, pattern: str,
                       n: int = 10) -> list[tuple[str, int]]:
         """terms.regex across shards: FULL per-shard candidate sets
         (regex CPU on the process pool), dfs summed per term over
         disjoint doc sets, one global cut."""
-        cands = self._scatter(
-            _shard_suggest_task,
-            [(s.index_dir, off, {"kind": "regex", "arg": pattern})
-             for s, off in zip(self.shards, self.offsets)],
-        )
-        merged = pd.concat(cands).groupby(
-            "term", as_index=False)["df"].sum()
+        merged = pd.concat(
+            self._replies("_suggest_candidates", "regex", pattern)
+        ).groupby("term", as_index=False)["df"].sum()
         return _suggest_rank(merged, n)
 
     def suggest_infix(self, fragment: str,
                       n: int = 10) -> list[tuple[str, int]]:
         """AnalyzingInfixSuggester across shards — same exact merge
         as suggest_regex."""
-        cands = self._scatter(
-            _shard_suggest_task,
-            [(s.index_dir, off, {"kind": "infix", "arg": fragment})
-             for s, off in zip(self.shards, self.offsets)],
-        )
-        merged = pd.concat(cands).groupby(
-            "term", as_index=False)["df"].sum()
+        merged = pd.concat(
+            self._replies("_suggest_candidates", "infix", fragment)
+        ).groupby("term", as_index=False)["df"].sum()
         return _suggest_rank(merged, n)
 
     def facet_by_metric(self, qterms: list[str], facet_field: str,
@@ -3950,14 +3633,8 @@ class ShardedSearcher:
         """Scatter-gather facet-by-metric, EXACT: per-shard (cnt,
         unrounded sum) partials merged, rounded once, ranked once
         (membership is idf-free — one round)."""
-        terms = sorted(set(strip_stops(self.stats, qterms)))
-        parts = self._scatter(
-            _shard_fmetric_task,
-            [(s.index_dir, off,
-              {"terms": terms, "facet_field": facet_field,
-               "metric_field": metric_field, "mode": mode})
-             for s, off in zip(self.shards, self.offsets)],
-        )
+        parts = self._replies("_fmetric_partials", qterms, facet_field,
+                              metric_field, mode)
         return _fmetric_finalize(
             pd.concat(parts, ignore_index=True), facet_field, n
         )
@@ -3972,12 +3649,8 @@ class ShardedSearcher:
         spellcheck (tested).  The per-shard candidate scan is
         pure-Python levenshtein over the whole catalog — CPU the GIL
         would serialize — so it scatters on the PROCESS pool."""
-        cands = self._scatter(
-            _shard_spell_task,
-            [(s.index_dir, off, {"word": word, "max_edits": max_edits})
-             for s, off in zip(self.shards, self.offsets)],
-        )
-        cat = pd.concat(cands)
+        cat = pd.concat(self._replies("_spell_candidates", word,
+                                      max_edits))
         merged = cat.groupby(["term", "dist"], as_index=False)["df"].sum()
         rows = sorted(
             zip(merged["term"], merged["dist"], merged["df"]),
@@ -4003,13 +3676,8 @@ class ShardedSearcher:
         sets), mean derived after the merge — equals the union
         index's stats (tested).  Membership is idf-free, so the
         scatter is one round, on the process pool."""
-        terms = sorted(set(strip_stops(self.stats, qterms)))
-        return _stats_finalize(self._scatter(
-            _shard_stats_task,
-            [(s.index_dir, off,
-              {"terms": terms, "field": field, "mode": mode})
-             for s, off in zip(self.shards, self.offsets)],
-        ))
+        return _stats_finalize(
+            self._replies("_stats_partial", qterms, field, mode))
 
     def pivot_facet(self, qterms: list[str], field1: str,
                     field2: str, n1: int = 5, n2: int = 3,
@@ -4020,14 +3688,8 @@ class ShardedSearcher:
         doc sets, ONE global rank — no Solr-style refinement
         round-trip needed, same argument as the value-facet merge;
         the per-shard pandas work runs on the process pool."""
-        terms = sorted(set(strip_stops(self.stats, qterms)))
-        cat = pd.concat(self._scatter(
-            _shard_pivot_task,
-            [(s.index_dir, off,
-              {"terms": terms, "field1": field1, "field2": field2,
-               "mode": mode})
-             for s, off in zip(self.shards, self.offsets)],
-        ))
+        cat = pd.concat(self._replies("_pivot_pairs", qterms, field1,
+                                      field2, mode))
         merged = cat.groupby([field1, field2],
                              dropna=False)["cnt"].sum().reset_index()
         return _pivot_rank(merged, field1, field2, n1, n2)
@@ -4035,20 +3697,15 @@ class ShardedSearcher:
     def collapse_topk(self, qterms: list[str], collapse_field: str,
                       k: int = 10, mode: str = "or") -> pd.DataFrame:
         """Scatter-gather field collapse, EXACT: each shard returns
-        its FULL per-value head map scored with the merged-catalog
-        dfs (the getDocFreqs exchange — scores are corpus-wide), the
-        client re-collapses per value by (score desc, doc_id asc)
-        over disjoint doc sets and cuts top-k.  Rank-identical to the
+        its FULL per-value head map scored under the global view (the
+        getDocFreqs exchange — scores are corpus-wide), the client
+        re-collapses per value by (score desc, doc_id asc) over
+        disjoint doc sets and cuts top-k.  Rank-identical to the
         union-built index (tested)."""
         terms = sorted(set(strip_stops(self.stats, qterms)))
-        cat = self._merged_cat(terms)
-        frames = self._scatter(
-            _shard_grouping_task,
-            self._payloads(terms, cat, {
-                "op": "collapse", "field": collapse_field, "mode": mode,
-            }),
-        )
-        allh = pd.concat(frames, ignore_index=True)
+        parts, _ = self._fan("_collapse_heads", qterms, collapse_field,
+                             mode, view=self._view(self._merged_cat(terms)))
+        allh = pd.concat(_shift_ids(parts), ignore_index=True)
         allh = allh.sort_values(["score", "doc_id"],
                                 ascending=[False, True], kind="mergesort")
         heads = allh.drop_duplicates(subset=[collapse_field],
@@ -4065,15 +3722,11 @@ class ShardedSearcher:
         its per-shard top-ks, so the client just re-ranks within each
         value and keeps ranks <= k_per_group."""
         terms = sorted(set(strip_stops(self.stats, qterms)))
-        cat = self._merged_cat(terms)
-        frames = self._scatter(
-            _shard_grouping_task,
-            self._payloads(terms, cat, {
-                "op": "group", "field": group_field,
-                "k_per_group": k_per_group, "mode": mode,
-            }),
-        )
-        alld = pd.concat(frames, ignore_index=True).drop(columns=["rank"])
+        parts, _ = self._fan("group_topk", qterms, group_field,
+                             k_per_group, mode,
+                             view=self._view(self._merged_cat(terms)))
+        alld = pd.concat(_shift_ids(parts),
+                         ignore_index=True).drop(columns=["rank"])
         alld = alld.sort_values(["score", "doc_id"],
                                 ascending=[False, True], kind="mergesort")
         alld["rank"] = alld.groupby(group_field, dropna=False,
@@ -4119,14 +3772,8 @@ class ShardedSearcher:
         terms = sorted(set(strip_stops(self.stats, qterms)))
         local_floor = (max(int(shard_min_df), int(min_df))
                        if shard_size is not None else int(shard_min_df))
-        res = self._scatter(
-            _shard_sigterms_task,
-            [(s.index_dir, off,
-              {"terms": terms, "mode": mode, "max_fg": max_fg,
-               "shard_min_df": local_floor,
-               "shard_size": shard_size})
-             for s, off in zip(self.shards, self.offsets)],
-        )
+        res = self._replies("_sigterms_fg_tbl", qterms, mode, max_fg,
+                            local_floor, shard_size)
         import pyarrow as pa
 
         n_fg = sum(n for _, n in res)
@@ -4169,74 +3816,43 @@ class ShardedSearcher:
                              m_terms)
         if not rep:
             return []
-        repcat = cat[cat["term"].isin(rep)]
-        pairs = self._scatter(
-            _shard_topk_task,
-            self._payloads(rep, repcat, {
-                "k": k + 1, "mode": "or", "min_match": None,
-            }),
-        )
-        ids = np.concatenate([p[0] for p in pairs])
-        scores = np.concatenate([p[1] for p in pairs])
-        keep = ids != did
-        ids, scores = ids[keep], scores[keep]
-        order = np.lexsort((ids, -scores))[:k]
-        return [(int(ids[i]), float(scores[i])) for i in order]
+        parts, _ = self._fan("topk", rep, k + 1, "or", None,
+                             view=self._view(cat[cat["term"].isin(rep)]))
+        hits = [h for h in _merge_hits(parts, 0, None) if h[0] != did]
+        return hits[:k]
 
     def search(self, qterms: list[str], k: int = 10, mode: str = "or",
                fields: list[str] | None = None,
                timeout_ms: float | None = None) -> dict:
         """One-call scatter surface: hits + numFound + maxScore +
         qTime — the full client RPC (Client.java fan-out +
-        QueryResponse.java:27-192 envelope): per-shard WAND top-k
-        with the df exchange, numFound from the bitset count sum
-        (disjoint doc sets), stored fields via the shard-routed
-        fetch.  Mirrors LocalSearcher.search (tested).
+        QueryResponse.java:27-192 envelope): ONE round of per-shard
+        ``_search_page`` calls (WAND top-k under the global view AND
+        the bitset match count), numFound summed over disjoint doc
+        sets, stored fields via the shard-routed fetch.  Mirrors
+        LocalSearcher.search (tested).
 
         Completeness fields (ClientResult.isComplete /
         getMissingShards parity): ``shards_total``, ``shards_failed``
         (dir list — empty when every shard answered), ``complete``.
         With ``complete=False`` on the handle, a timed-out/dead shard
         drops out of the merge instead of raising."""
-        import time
-
         t0 = time.monotonic()
         terms = sorted(set(strip_stops(self.stats, qterms)))
-        cat = self._merged_cat(terms)
-        parts = self._scatter(
-            _shard_search_task,
-            self._payloads(terms, cat, {
-                # k or 1: a k=0 envelope still reports maxScore (the
-                # LocalSearcher rule — its max is over the match set)
-                "k": max(k, 1), "mode": mode, "min_match": None,
-            }),
+        parts, failed = self._fan(
+            # k or 1: a k=0 envelope still reports maxScore (the
+            # LocalSearcher rule — its max is over the match set)
+            "_search_page", list(qterms), max(k, 1), mode,
+            view=self._view(self._merged_cat(terms)),
             timeout_ms=timeout_ms,
         )
-        if parts:
-            ids = np.concatenate([x[0] for x in parts])
-            scores = np.concatenate([x[1] for x in parts])
-        else:
-            ids = np.empty(0, np.int64)
-            scores = np.empty(0, np.float64)
-        n = sum(int(x[2]) for x in parts)
-        order = np.lexsort((ids, -scores))
-        max_score = float(scores[order[0]]) if order.size else None
-        order = order[:k]
-        hits = [(int(ids[i]), float(scores[i])) for i in order]
-        if fields:
-            detail = self.fetch([d for d, _ in hits], fields)
-            detail["score"] = [s for _, s in hits]
-        else:
-            detail = pd.DataFrame(hits, columns=["doc_id", "score"])
-        return {
-            "hits": detail,
-            "num_found": int(n),
-            "max_score": max_score,
-            "qtime_ms": int((time.monotonic() - t0) * 1000),
-            "shards_total": len(self.shards),
-            "shards_failed": list(self.shards_failed),
-            "complete": not self.shards_failed,
-        }
+        page = _merge_hits([(off, p) for off, (p, _) in parts], 0,
+                           max(k, 1))
+        env = _envelope(self, page, k, sum(n for _, (_, n) in parts),
+                        fields, t0)
+        env.update(shards_total=len(self.shards),
+                   shards_failed=list(failed), complete=not failed)
+        return env
 
     def fetch(self, doc_ids: list[int],
               fields: list[str]) -> pd.DataFrame:

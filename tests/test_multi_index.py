@@ -799,3 +799,32 @@ def test_sharded_significant_terms_shard_size(spark, split_dirs):
         assert again.values.tolist() == tight.values.tolist()
     finally:
         sh.close()
+
+
+def test_sharded_facet_and_rare_terms_one_round(spark, split_dirs):
+    """facet and rare_terms only need the match set, which idf never
+    changes: each call is ONE scatter round with no parent-side df
+    exchange, and still equals the union-built index."""
+    from unittest import mock
+
+    from katta_spark.index.serve import LocalSearcher, ShardedSearcher
+
+    _, da, db, du = split_dirs
+    sh = ShardedSearcher([da, db])
+    un = LocalSearcher(du)
+    try:
+        with mock.patch.object(ShardedSearcher, "_merged_cat",
+                               side_effect=AssertionError("df exchange")):
+            for terms, mode in [(["import"], "or"),
+                                (["scan", "merge"], "and")]:
+                n0 = sh.metrics()["n_scatters"]
+                assert sh.facet(terms, "lang", n=10, mode=mode) == \
+                    un.facet(terms, "lang", n=10, mode=mode)
+                assert sh.metrics()["n_scatters"] == n0 + 1
+                assert sh.rare_terms(terms, "path", max_count=2, n=10,
+                                     mode=mode) == \
+                    un.rare_terms(terms, "path", max_count=2, n=10,
+                                  mode=mode)
+                assert sh.metrics()["n_scatters"] == n0 + 2
+    finally:
+        sh.close()

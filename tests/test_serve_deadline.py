@@ -11,7 +11,6 @@ budget expires (ClientResultReceiver.java:147-166,
 ClientResult.isComplete / getMissingShards)."""
 
 import os
-import signal
 import time
 
 import pytest
@@ -23,9 +22,7 @@ from katta_spark.index.serve import (
     LocalSearcher,
     QueryTimeout,
     ShardedSearcher,
-    _shard_count_task,
-    _shard_facet_task,
-    _shard_search_task,
+    _deadline_task,
 )
 
 BR = 256
@@ -96,54 +93,92 @@ def test_stored_field_surfaces_abort_on_budget(two_shards):
     assert ls._deadline is None
 
 
-def test_worker_deadline_covers_stored_surfaces(two_shards, monkeypatch):
-    """The scatter worker's process-wide deadline (armed by
-    _deadline_task at 75% of the budget) aborts stored-field scans
-    in-worker — a timed-out worker running a facet or sig_terms scan
-    frees itself instead of staying wedged through the scan."""
-    import katta_spark.index.serve as serve_mod
+def _under_worker_deadline(fn):
+    """Run ``fn`` the way a scatter worker runs a call: through
+    _deadline_task with an already-spent budget."""
+    return _deadline_task((lambda _payload: fn(), None, 0))
+
+
+def test_worker_deadline_covers_stored_surfaces(two_shards):
+    """The scatter worker's deadline (armed by _deadline_task at 75%
+    of the budget) aborts stored-field scans in-worker — a timed-out
+    worker running a facet or sig_terms scan frees itself instead of
+    staying wedged through the scan."""
+    da, _ = two_shards
+    ls = LocalSearcher(da, qcache_size=0)
+    with pytest.raises(QueryTimeout):
+        _under_worker_deadline(lambda: ls.facet(["import"], "lang"))
+    with pytest.raises(QueryTimeout):
+        _under_worker_deadline(lambda: ls.significant_terms(["import"]))
+    with pytest.raises(QueryTimeout):
+        _under_worker_deadline(lambda: ls.sorted_query(
+            ["import"], [("path", "asc")], ["doc_id", "path"], 5))
+    assert ls.facet(["import"], "lang")
+
+
+def test_budget_never_leaks_across_threads(two_shards):
+    """A query's deadline belongs to its call: two threads send
+    budgeted queries (which may time out) and two send unbudgeted
+    ones to ONE handle; the unbudgeted ones must never raise."""
+    import sys
+    import threading
 
     da, _ = two_shards
     ls = LocalSearcher(da, qcache_size=0)
-    monkeypatch.setattr(serve_mod, "_WORKER_DEADLINE", 0.0)
-    with pytest.raises(QueryTimeout):
-        ls.facet(["import"], "lang")
-    with pytest.raises(QueryTimeout):
-        ls.significant_terms(["import"])
-    with pytest.raises(QueryTimeout):
-        ls.sorted_query(["import"], [("path", "asc")],
-                        ["doc_id", "path"], 5)
-    monkeypatch.setattr(serve_mod, "_WORKER_DEADLINE", None)
-    assert ls.facet(["import"], "lang")
+    want = ls.topk(["import", "table"], k=5)
+    errors: list[Exception] = []
+    wrong: list = []
+
+    def budgeted():
+        for _ in range(150):
+            try:
+                ls.topk(["import", "table"], k=5, timeout_ms=0.5)
+                ls.query("import OR table", k=5, timeout_ms=0.5)
+            except QueryTimeout:
+                pass
+
+    def unbudgeted():
+        for _ in range(150):
+            try:
+                got = ls.topk(["import", "table"], k=5)
+                ls.query("import OR table", k=5)
+            except Exception as e:  # noqa: BLE001 - any raise fails
+                errors.append(e)
+                continue
+            if got != want:
+                wrong.append(got)
+
+    threads = [threading.Thread(target=f)
+               for f in (budgeted, budgeted, unbudgeted, unbudgeted)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, f"{len(errors)} unbudgeted calls raised: {errors[0]!r}"
+    assert not wrong
 
 
 # --------------------------------------------------------------- scatter
 
-def _slow_count_task(payload):
-    d = payload[0]
-    if "shard_b" in d:
-        time.sleep(3.0)
-    return _shard_count_task(payload)
+def _count_calls(sh):
+    """One count_raw dispatcher payload per shard."""
+    return sh._calls("count_raw", ["import"], "or")
 
 
-def _slow_search_task(payload):
-    d = payload[0]
-    if "shard_b" in d:
-        time.sleep(3.0)
-    return _shard_search_task(payload)
-
-
-def test_scatter_timeout_partial_count(two_shards):
+def test_scatter_timeout_partial_count(two_shards, shard_fault):
     da, db = two_shards
     sh = ShardedSearcher([da, db], timeout_ms=700, complete=False)
     try:
         exact_a = LocalSearcher(da).count(["import"])
+        shard_fault(sleep=3.0)
         t0 = time.monotonic()
-        got = sum(sh._scatter(
-            _slow_count_task,
-            [(s.index_dir, {"terms": ["import"], "mode": "or"})
-             for s in sh.shards],
-        ))
+        got = sum(n for _, n in sh._scatter(_count_calls(sh))[0])
         took = time.monotonic() - t0
         # returned within ~the budget, not after the slow shard
         assert took < 2.5
@@ -153,23 +188,18 @@ def test_scatter_timeout_partial_count(two_shards):
         sh.close()
 
 
-def test_scatter_timeout_complete_raises(two_shards):
+def test_scatter_timeout_complete_raises(two_shards, shard_fault):
     da, db = two_shards
     sh = ShardedSearcher([da, db], timeout_ms=500, complete=True)
     try:
+        shard_fault(sleep=3.0)
         with pytest.raises(TimeoutError, match="shard"):
-            sh._scatter(
-                _slow_count_task,
-                [(s.index_dir, {"terms": ["import"], "mode": "or"})
-                 for s in sh.shards],
-            )
+            sh._scatter(_count_calls(sh))
     finally:
         sh.close()
 
 
-def test_search_envelope_reports_missing_shards(two_shards, monkeypatch):
-    import katta_spark.index.serve as serve_mod
-
+def test_search_envelope_reports_missing_shards(two_shards, shard_fault):
     da, db = two_shards
     sh = ShardedSearcher([da, db], complete=False)
     try:
@@ -178,9 +208,8 @@ def test_search_envelope_reports_missing_shards(two_shards, monkeypatch):
         assert env["shards_total"] == 2
         assert env["shards_failed"] == [] and env["complete"] is True
         n_full = env["num_found"]
-        # per-query budget; shard_b's task hangs past it
-        monkeypatch.setattr(serve_mod, "_shard_search_task",
-                            _slow_search_task)
+        # per-query budget; shard_b's call hangs past it
+        shard_fault(sleep=3.0, method="_search_page")
         env = sh.search(["import"], k=5, timeout_ms=700)
         assert env["complete"] is False
         assert env["shards_failed"] == [db]
@@ -212,29 +241,17 @@ def test_untimed_scatter_unchanged(two_shards):
 _KILL_SENTINEL = "/tmp/katta_kill_once_sentinel"
 
 
-def _kill_once_count_task(payload):
-    d = payload[0]
-    if "shard_b" in d and not os.path.exists(_KILL_SENTINEL):
-        with open(_KILL_SENTINEL, "w") as f:
-            f.write("1")
-        os.kill(os.getpid(), signal.SIGKILL)
-    return _shard_count_task(payload)
-
-
-def test_scatter_retries_dead_worker_once(two_shards):
+def test_scatter_retries_dead_worker_once(two_shards, shard_fault):
     """A SIGKILLed pool worker (BrokenProcessPool) gets the shard's
-    task re-dispatched once to a fresh pool — exact results, no
+    call re-dispatched once to a fresh pool — exact results, no
     partial, complete=True never trips."""
     da, db = two_shards
     if os.path.exists(_KILL_SENTINEL):
         os.unlink(_KILL_SENTINEL)
     sh = ShardedSearcher([da, db], complete=True)
     try:
-        got = sum(sh._scatter(
-            _kill_once_count_task,
-            [(s.index_dir, {"terms": ["import"], "mode": "or"})
-             for s in sh.shards],
-        ))
+        shard_fault(kill_once=_KILL_SENTINEL)
+        got = sum(n for _, n in sh._scatter(_count_calls(sh))[0])
         want = (LocalSearcher(da).count(["import"])
                 + LocalSearcher(db).count(["import"]))
         assert got == want
@@ -245,21 +262,11 @@ def test_scatter_retries_dead_worker_once(two_shards):
             os.unlink(_KILL_SENTINEL)
 
 
-def _slow_collect_task(payload):
-    from katta_spark.index.serve import _shard_collect_task
-
-    if "shard_b" in payload[0]:
-        time.sleep(3.0)
-    return _shard_collect_task(payload)
-
-
-def test_sharded_query_budget_spans_both_rounds(two_shards, monkeypatch):
+def test_sharded_query_budget_spans_both_rounds(two_shards, shard_fault):
     """The two-round Lucene-string scatter shares ONE client budget;
     a shard that misses the df exchange is excluded from evaluation
     too (consistent idf), and under complete=False the answer is the
     surviving shard's exact ranking."""
-    import katta_spark.index.serve as serve_mod
-
     da, db = two_shards
     # scache off: the repeated identical query must RE-SCATTER here
     # (a cache hit would — correctly, but not what this test pins —
@@ -268,8 +275,7 @@ def test_sharded_query_budget_spans_both_rounds(two_shards, monkeypatch):
     try:
         want_full = sh.query("(import OR table) AND scan", k=5)
         assert sh.shards_failed == []
-        monkeypatch.setattr(serve_mod, "_shard_collect_task",
-                            _slow_collect_task)
+        shard_fault(sleep=3.0, method="_query_terms")
         t0 = time.monotonic()
         got = sh.query("(import OR table) AND scan", k=5,
                        timeout_ms=700)
@@ -300,7 +306,7 @@ def test_sharded_refresh_preserves_policy(two_shards):
         sh.close()
 
 
-def test_metrics_surfaces(two_shards):
+def test_metrics_surfaces(two_shards, shard_fault):
     """node_metrics / metrics counters: cache stats move, scatter
     counters count, failures recorded — the client-side view of the
     reference's node metrics registry."""
@@ -316,11 +322,8 @@ def test_metrics_surfaces(two_shards):
     sh = ShardedSearcher([da, db], timeout_ms=700, complete=False)
     try:
         sh.count(["import"])
-        sh._scatter(
-            _slow_count_task,
-            [(s.index_dir, {"terms": ["import"], "mode": "or"})
-             for s in sh.shards],
-        )
+        shard_fault(sleep=3.0)
+        sh._scatter(_count_calls(sh))
         sm = sh.metrics()
         assert sm["n_scatters"] == 2
         assert sm["n_shard_failures"] == 1
@@ -330,7 +333,7 @@ def test_metrics_surfaces(two_shards):
         sh.close()
 
 
-def test_all_shards_failed_raises_even_tolerant(two_shards, monkeypatch):
+def test_all_shards_failed_raises_even_tolerant(two_shards, shard_fault):
     """Zero surviving shards has no meaningful partial result: even
     complete=False raises a clear TimeoutError (Solr shards.tolerant
     behaves the same) instead of pushing an empty list into every
@@ -338,64 +341,42 @@ def test_all_shards_failed_raises_even_tolerant(two_shards, monkeypatch):
     da, db = two_shards
     sh = ShardedSearcher([da, db], complete=False)
     try:
+        shard_fault(shard="", sleep=3.0)
         with pytest.raises(TimeoutError, match="all shards"):
-            sh._scatter(
-                _sleep_both_task,
-                [(s.index_dir, {"terms": ["import"], "mode": "or"})
-                 for s in sh.shards],
-                timeout_ms=400,
-            )
+            sh._scatter(_count_calls(sh), timeout_ms=400)
         assert sorted(sh.shards_failed) == sorted([da, db])
     finally:
         sh.close()
 
 
-def _sleep_both_task(payload):
-    time.sleep(3.0)
-    return _shard_count_task(payload)
-
-
-def _boom_task(payload):
-    if "shard_b" in payload[0]:
-        raise ValueError("no such field: bogus")
-    return _shard_count_task(payload)
-
-
-def _slow_then_facet_task(payload):
-    from katta_spark.index.serve import _shard_facet_task
-
-    if "shard_b" in payload[0]:
-        time.sleep(0.7)
-    return _shard_facet_task(payload)
-
-
-def test_stored_field_scatter_worker_not_wedged(two_shards):
+def test_stored_field_scatter_worker_not_wedged(two_shards, shard_fault):
     """Cascade test for a STORED-FIELD scatter: the slow worker blows
-    the budget; its armed deadline aborts the facet task's stored
+    the budget; its armed deadline aborts the facet call's stored
     read in-worker (QueryTimeout) instead of running the scan to
     completion, so the SAME pool serves the next scatter with full
     results — no queue backs up behind a wedged scan."""
     da, db = two_shards
     sh = ShardedSearcher([da, db], timeout_ms=300, complete=False)
     try:
-        cat = sh._merged_cat(["import"])
-        payloads = sh._payloads(["import"], cat,
-                                {"field": "lang", "mode": "or"})
+        payloads = sh._calls("_facet_counts", ["import"], "lang", "or")
+        shard_fault(sleep=0.7)
         t0 = time.monotonic()
-        sh._scatter(_slow_then_facet_task, payloads)
+        sh._scatter(payloads)
         assert time.monotonic() - t0 < 2.0
         assert sh.shards_failed == [db]
         pool = sh._pool
         time.sleep(0.8)  # let worker b finish its in-worker abort
-        got = sh._scatter(_shard_facet_task, payloads)
+        shard_fault()
+        got, _ = sh._scatter(payloads)
         assert sh.shards_failed == [] and len(got) == 2
         assert sh._pool is pool, "pool was torn down"
     finally:
         sh.close()
 
 
-def test_task_exception_keeps_pool_and_raises_original(two_shards):
-    """A deterministic task error must NOT tear down the healthy
+def test_task_exception_keeps_pool_and_raises_original(two_shards,
+                                                     shard_fault):
+    """A deterministic call error must NOT tear down the healthy
     pool (the workers' warm shard caches survive) and must surface
     the ORIGINAL exception under complete=True; under complete=False
     the shard is dropped without a retry."""
@@ -404,26 +385,21 @@ def test_task_exception_keeps_pool_and_raises_original(two_shards):
     try:
         sh.count(["import"])  # build the pool
         pool_before = sh._pool
+        shard_fault(error="no such field: bogus")
         with pytest.raises(ValueError, match="bogus"):
-            sh._scatter(
-                _boom_task,
-                [(s.index_dir, {"terms": ["import"], "mode": "or"})
-                 for s in sh.shards],
-            )
+            sh._scatter(_count_calls(sh))
         # the failing shard is marked even on the complete=True
-        # task-exception raise path, consistent with timeout/broken
+        # call-exception raise path, consistent with timeout/broken
         assert sh.shards_failed == [db]
         assert sh.metrics()["n_shard_failures"] == 1
         assert sh._pool is pool_before, "healthy pool was torn down"
         # pool still serves queries
+        shard_fault()
         assert sh.count(["import"]) > 0
 
         sh.complete = False
-        got = sh._scatter(
-            _boom_task,
-            [(s.index_dir, {"terms": ["import"], "mode": "or"})
-             for s in sh.shards],
-        )
+        shard_fault(error="no such field: bogus")
+        got, _ = sh._scatter(_count_calls(sh))
         assert len(got) == 1 and sh.shards_failed == [db]
         assert sh._pool is pool_before
     finally:

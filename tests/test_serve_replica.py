@@ -23,7 +23,6 @@ from katta_spark.index.serve import (
     LocalSearcher,
     ShardedSearcher,
     _is_infra_failure,
-    _shard_count_task,
 )
 
 BR = 256
@@ -149,26 +148,17 @@ def test_inline_single_shard_failover(shard_pair):
         sh.close()
 
 
-def _boom_task(payload):
-    if "shard_b" in payload[0]:
-        raise ValueError("no such field: bogus")
-    return _shard_count_task(payload)
-
-
-def test_deterministic_error_never_fails_over(shard_pair):
-    """A bad-query (ValueError) task failure must NOT consume a
+def test_deterministic_error_never_fails_over(shard_pair, shard_fault):
+    """A bad-query (ValueError) call failure must NOT consume a
     replica: it raises as before with the rotation intact."""
     da, db, rb = shard_pair
 
     sh = ShardedSearcher([da, db], replicas={db: [rb]}, complete=True)
     try:
         sh.count(["import"])  # build pool
+        shard_fault(error="no such field: bogus")
         with pytest.raises(ValueError, match="bogus"):
-            sh._scatter(
-                _boom_task,
-                [(s.index_dir, {"terms": ["import"], "mode": "or"})
-                 for s in sh.shards],
-            )
+            sh._scatter(sh._calls("count_raw", ["import"], "or"))
         assert sh.metrics()["n_replica_failovers"] == 0
         assert sh.replicas == {db: [rb]}
     finally:

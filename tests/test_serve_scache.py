@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from katta_spark.corpus import synthetic_corpus, with_ingest_columns
 from katta_spark.index import build_index
-from katta_spark.index.serve import ShardedSearcher, _shard_count_task
+from katta_spark.index.serve import ShardedSearcher
 
 BR = 256
 
@@ -52,15 +52,7 @@ def test_scatter_cache_hits_rank_identical(two_shards):
         sh.close()
 
 
-def _slow_b_count_task(payload):
-    if "shard_b" in payload[0]:
-        time.sleep(5.0)
-    return _shard_count_task(payload)
-
-
-def test_partial_results_never_cached(two_shards, monkeypatch):
-    import katta_spark.index.serve as serve_mod
-
+def test_partial_results_never_cached(two_shards, shard_fault):
     da, db = two_shards
     sh = ShardedSearcher([da, db], complete=False)
     try:
@@ -68,19 +60,69 @@ def test_partial_results_never_cached(two_shards, monkeypatch):
         sh2 = ShardedSearcher([da, db], timeout_ms=1500,
                               complete=False)
         try:
-            monkeypatch.setattr(serve_mod, "_shard_count_task",
-                                _slow_b_count_task)
+            shard_fault(sleep=5.0)
             partial = sh2.count(["import"])
             assert partial < full and sh2.shards_failed == [db]
             # the degraded answer was NOT cached: the retry
-            # re-scatters (and with the slow task gone, completes)
-            monkeypatch.setattr(serve_mod, "_shard_count_task",
-                                _shard_count_task)
+            # re-scatters (and with the slow shard gone, completes)
+            shard_fault()
             sh2.timeout_ms = None
             assert sh2.count(["import"]) == full
             assert sh2.metrics()["scache_hits"] == 0
         finally:
             sh2.close()
+    finally:
+        sh.close()
+
+
+def test_failures_are_per_call(two_shards, shard_fault):
+    """Thread A runs budgeted counts that go partial on a slow
+    shard_b while thread B runs full searches on the SAME handle.
+    Each call reads its own scatter's failures: B's envelopes all say
+    complete, and A's partial answer never enters the scatter cache."""
+    import threading
+
+    from katta_spark.index.serve import LocalSearcher
+
+    da, db = two_shards
+    full = sum(LocalSearcher(d).count(["import"]) for d in (da, db))
+    sh = ShardedSearcher([da, db], complete=False)
+    try:
+        sh.search(["import"], k=5)  # start the pool
+        shard_fault(sleep=0.4, method="count_raw")
+        done = threading.Event()
+        partials, envs = [], []
+
+        def run_a():
+            try:
+                for _ in range(6):
+                    try:
+                        partials.append(sh.count(["import"],
+                                                 timeout_ms=150))
+                    except TimeoutError:
+                        pass  # both shards queued past the budget
+                    time.sleep(0.3)
+            finally:
+                done.set()
+
+        def run_b():
+            while not done.is_set():
+                envs.append(sh.search(["import"], k=5))
+
+        threads = [threading.Thread(target=run_a),
+                   threading.Thread(target=run_b)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+        assert envs and partials
+        assert [e["shards_failed"] for e in envs if not e["complete"]] \
+            == []
+        assert all(p < full for p in partials)
+        assert sh.metrics()["scache_hits"] == 0
+        shard_fault()
+        assert sh.count(["import"]) == full
     finally:
         sh.close()
 

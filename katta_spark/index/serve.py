@@ -8,9 +8,11 @@ shards to a node-local work dir; LuceneServer.search answers from
 the local IndexSearcher — a query is an RPC, never a MapReduce job).
 ``PhysicalIndex`` is the cluster tier here (build + heavy analytics
 through Spark); :class:`LocalSearcher` is the node tier: it opens
-the SAME parquet index layout with pyarrow, prunes row groups by
-term (postings files are term-sorted at write, so parquet min/max
-stats skip everything but the query's terms), and scores through
+the SAME parquet index layout with pyarrow, keeps the row groups its
+queries touch RESIDENT as decoded numpy columns (:class:`_Resident`:
+postings and catalog files are term-sorted at write, so parquet
+min/max stats pick a query term's row groups and a binary search
+slices its rows — the Lucene terms-index seek), and scores through
 numpy-native scans (:func:`_wand_scan` / :func:`_exhaustive_scan`)
 that mirror the Spark kernels' decode, accumulation order, skip
 rule, and tie-break exactly (rank-identity tested query-by-query;
@@ -33,12 +35,17 @@ from __future__ import annotations
 import contextlib
 import contextvars
 import json
+import os
+import threading
 import time
+from collections import OrderedDict
 from pathlib import Path
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 import pyarrow.dataset as pa_ds
+import pyarrow.parquet as pq
 
 from katta_spark.index.search import (
     make_phrase_kernel,
@@ -215,19 +222,298 @@ def _collect_plain_terms(stats: dict, fields: set, analyzers: dict,
     return out
 
 
-def _np_cols(blocks: pd.DataFrame):
-    """Columns of a (block_id, term)-sorted blocks frame as plain
-    numpy arrays — the serving scan avoids ALL per-row pandas access
-    (profiling: itertuples/iloc dominated the kernel 4:1 over the
-    actual varint decode)."""
-    return (
-        blocks["term"].to_numpy(),
-        blocks["block_id"].to_numpy(),
-        blocks["df"].to_numpy(),
-        blocks["doc_gaps"].to_numpy(),
-        blocks["tfs"].to_numpy(),
-        blocks["dls"].to_numpy(),
-    )
+#: byte budget of the process-wide resident cache (:data:`_RESIDENT`)
+#: — decoded postings and catalog row groups beyond it are evicted
+#: least-recently-used first.  One budget per PROCESS: every handle in
+#: it shares the cache, and each forked scatter worker holds its own.
+_RESIDENT_BUDGET = 256 << 20
+
+#: integer columns of the postings / terms files (an empty read keeps
+#: their dtype); every other column is string or binary
+_INT_COLS = frozenset({"block_id", "max_tf", "min_dl", "n", "df", "cf"})
+
+
+class _FileId(NamedTuple):
+    """Identity of one parquet file as a handle opened it — the cache
+    key: a rewritten file (new size or mtime) is a different file."""
+    path: str
+    size: int
+    mtime_ns: int
+
+
+def _file_ids(paths) -> list[_FileId]:
+    out = []
+    for p in paths:
+        st = os.stat(p)
+        out.append(_FileId(p, st.st_size, st.st_mtime_ns))
+    return out
+
+
+class _Meta(NamedTuple):
+    """A file's footer: its columns, and per row group the row count
+    and the ``term`` min/max statistics (placeholders where a row
+    group carries none — ``nostats`` marks those, always read)."""
+    md: object
+    names: frozenset
+    nrows: list
+    mins: np.ndarray
+    maxs: np.ndarray
+    nostats: np.ndarray
+
+
+class _Terms(NamedTuple):
+    """A row group's ``term`` column as a term -> row-range index:
+    the distinct terms, sorted, and where each one's run of rows
+    starts (``starts[-1]`` = row count)."""
+    uterms: np.ndarray
+    starts: np.ndarray
+
+    @classmethod
+    def of(cls, arr, path: str) -> "_Terms":
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        n = len(arr)
+        if n > 1 and not pc.all(pc.less_equal(
+                arr.slice(0, n - 1), arr.slice(1))).as_py():
+            # every writer sorts within its files; the slices rely on it
+            raise ValueError(f"{path}: rows are not sorted by term")
+        brk = (np.nonzero(pc.not_equal(arr.slice(1), arr.slice(0, n - 1))
+                          .to_numpy(zero_copy_only=False))[0] + 1
+               if n > 1 else np.empty(0, np.int64))
+        starts = np.concatenate(([0], brk, [n])).astype(np.int64) if n \
+            else np.zeros(1, np.int64)
+        return cls(arr.take(pa.array(starts[:-1])).to_numpy(
+            zero_copy_only=False), starts)
+
+    @property
+    def nbytes(self) -> int:
+        return (self.starts.nbytes + 56 * self.uterms.size
+                + sum(map(len, self.uterms)))
+
+    def rows(self, pos: np.ndarray) -> np.ndarray:
+        """The term of each row ``pos``."""
+        return self.uterms[np.searchsorted(self.starts, pos, "right") - 1]
+
+
+class _Bin(NamedTuple):
+    """A binary column resident as one byte string and row offsets —
+    no per-row Python object until a query takes the row."""
+    offs: np.ndarray
+    data: bytes
+    valid: np.ndarray | None
+
+    @classmethod
+    def of(cls, arr) -> "_Bin":
+        import pyarrow as pa
+
+        bufs = arr.buffers()
+        odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+        offs = np.frombuffer(bufs[1], dtype=odt)[
+            arr.offset: arr.offset + len(arr) + 1].astype(np.int64)
+        data = bufs[2].to_pybytes() if bufs[2] is not None else b""
+        valid = (arr.is_valid().to_numpy(zero_copy_only=False)
+                 if arr.null_count else None)
+        return cls(offs, data, valid)
+
+    @classmethod
+    def null(cls, n: int) -> "_Bin":
+        return cls(np.zeros(n + 1, np.int64), b"", np.zeros(n, bool))
+
+    @property
+    def nbytes(self) -> int:
+        return (self.offs.nbytes + len(self.data)
+                + (0 if self.valid is None else self.valid.nbytes))
+
+    def take(self, idx: np.ndarray) -> np.ndarray:
+        """Rows ``idx`` as an object array of bytes (None = null)."""
+        d = self.data
+        out = np.empty(idx.size, dtype=object)
+        out[:] = [d[a:b] for a, b in zip(self.offs[idx].tolist(),
+                                         self.offs[idx + 1].tolist())]
+        if self.valid is not None:
+            out[~self.valid[idx]] = None
+        return out
+
+
+class _Resident:
+    """Process-wide LRU of decoded parquet column chunks — the node's
+    open IndexSearcher (a Katta node keeps one per shard,
+    LuceneServer.java:447-465): a term lookup is a binary search in a
+    resident term index instead of a dataset scan.  Keys are (file
+    identity, row group, column), so row groups load only when a query
+    touches them (the min/max statistics pick them) and only the
+    columns the query reads; footers are cached the same way.  Columns
+    stay compact: integers as numpy arrays, binaries as :class:`_Bin`,
+    ``term`` as its :class:`_Terms` run index.  Bytes are bounded by
+    :data:`_RESIDENT_BUDGET`: every access evicts least-recently-used
+    entries until the total fits.  A hit or miss is counted per
+    row-group read (a miss loads at least one column)."""
+
+    def __init__(self):
+        self._d: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+        self.bytes = 0
+        self.hits = 0
+        self.misses = 0
+
+    def _after_fork(self) -> None:
+        # a fork can copy the lock held by another thread of the
+        # parent: the child starts with a fresh one
+        self._lock = threading.Lock()
+        self.bytes = sum(nb for _, nb in self._d.values())
+
+    def _get(self, key):
+        e = self._d.get(key)
+        if e is not None:
+            self._d.move_to_end(key)
+            return e[0]
+        return None
+
+    def _put(self, key, val, nbytes: int) -> None:
+        if key not in self._d:
+            self._d[key] = (val, nbytes)
+            self.bytes += nbytes
+        self._trim()
+
+    def _trim(self) -> None:
+        while self.bytes > _RESIDENT_BUDGET and self._d:
+            _, (_, nb) = self._d.popitem(last=False)
+            self.bytes -= nb
+
+    @staticmethod
+    def _same_file(f: _FileId) -> None:
+        st = os.stat(f.path)
+        if (st.st_size, st.st_mtime_ns) != (f.size, f.mtime_ns):
+            raise FileNotFoundError(
+                f"{f.path} changed since the handle opened it; refresh()")
+
+    def meta(self, f: _FileId) -> _Meta:
+        with self._lock:
+            m = self._get((f, None))
+        if m is not None:
+            return m
+        self._same_file(f)
+        md = pq.read_metadata(f.path)
+        names = md.schema.to_arrow_schema().names
+        j = names.index("term")
+        nrows, mins, maxs, nostats = [], [], [], []
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            st = rg.column(j).statistics
+            ok = st is not None and st.has_min_max
+            nrows.append(rg.num_rows)
+            mins.append(st.min if ok else "")
+            maxs.append(st.max if ok else "")
+            nostats.append(not ok)
+        m = _Meta(md, frozenset(names), nrows, np.array(mins, dtype=object),
+                  np.array(maxs, dtype=object), np.array(nostats, bool))
+        with self._lock:
+            self._put((f, None), m, 1024 + 256 * len(nrows))
+        return m
+
+    def chunk(self, f: _FileId, m: _Meta, rg: int, cols: tuple) -> dict:
+        """The row group's ``cols``, decoded (a column the file lacks —
+        a pre-bitset ``id_bits`` — as an all-null :class:`_Bin`)."""
+        with self._lock:
+            got = {}
+            for c in cols:
+                v = self._get((f, rg, c))
+                if v is not None:
+                    got[c] = v
+            if len(got) == len(cols):
+                self.hits += 1
+                self._trim()
+                return got
+            self.misses += 1
+        missing = [c for c in cols if c not in got]
+        self._same_file(f)
+        tbl = pq.ParquetFile(f.path, metadata=m.md).read_row_group(
+            rg, columns=[c for c in missing if c in m.names])
+        new = {}
+        for c in missing:
+            if c not in m.names:
+                v = _Bin.null(m.nrows[rg])
+            elif c == "term":
+                v = _Terms.of(tbl.column(c).combine_chunks(), f.path)
+            elif c in _INT_COLS:
+                v = tbl.column(c).to_numpy()
+            else:
+                v = _Bin.of(tbl.column(c).combine_chunks())
+            new[c] = v
+        with self._lock:
+            for c, v in new.items():
+                self._put((f, rg, c), v, v.nbytes)
+        got.update(new)
+        return got
+
+
+#: the one resident cache of this process
+_RESIDENT = _Resident()
+os.register_at_fork(after_in_child=_RESIDENT._after_fork)
+
+
+def _resident_chunks(files: list[_FileId], cols: tuple, lo=None, hi=None,
+                     side: str = "right"):
+    """Yield every needed row group of term-sorted parquet ``files``
+    through the resident cache, in file order, as its decoded column
+    dict: all of them when ``lo`` is None, else those whose term
+    min/max statistics meet one of the sorted, disjoint ranges
+    [lo[i], hi[i]] (``side`` = "right") or [lo[i], hi[i]) ("left").
+    The deadline armed in this context is checked per row group."""
+    for f in files:
+        m = _RESIDENT.meta(f)
+        if lo is None:
+            rgs = range(len(m.nrows))
+        else:
+            # row group [min, max] meets range i iff lo_i <= max and
+            # hi_i reaches min; the ranges are sorted and disjoint, so
+            # the number that do is a difference of two counts
+            n_lo = np.searchsorted(lo, m.maxs, "right")
+            n_hi = np.searchsorted(hi, m.mins,
+                                   "left" if side == "right" else "right")
+            rgs = np.nonzero((n_lo > n_hi) | m.nostats)[0]
+        for rg in rgs:
+            _check_deadline(0)
+            yield _RESIDENT.chunk(f, m, int(rg), cols)
+
+
+def _resident_rows(files: list[_FileId], cols: tuple,
+                   lo: np.ndarray | None = None,
+                   hi: np.ndarray | None = None, side: str = "right"
+                   ) -> tuple[np.ndarray | None, dict[str, np.ndarray]]:
+    """Rows of ``files`` as numpy columns, in file order (binaries as
+    object arrays of bytes, ``term`` as strings): every row when
+    ``lo`` is None, else the rows whose term lies in one of the ranges
+    (see :func:`_resident_chunks`) — per row group, one binary search
+    pair per range in its term index.  Returns (codes, columns),
+    ``codes`` the range index of each row (None when ``lo`` is
+    None)."""
+    codes, parts = [], {c: [] for c in cols}
+    for ch in _resident_chunks(files, tuple(dict.fromkeys(("term", *cols))),
+                               lo, hi, side):
+        ti = ch["term"]
+        if lo is None:
+            pos = np.arange(int(ti.starts[-1]))
+        else:
+            a = ti.starts[np.searchsorted(ti.uterms, lo, "left")]
+            n = ti.starts[np.searchsorted(ti.uterms, hi, side)] - a
+            sel = np.nonzero(n > 0)[0]
+            if not sel.size:
+                continue
+            a, n = a[sel], n[sel]
+            pos = np.arange(int(n.sum())) + np.repeat(a - (np.cumsum(n) - n),
+                                                      n)
+            codes.append(np.repeat(sel, n))
+        for c in cols:
+            v = ch[c]
+            parts[c].append(ti.rows(pos) if c == "term" else
+                            v.take(pos) if isinstance(v, _Bin) else v[pos])
+    out = {c: (np.concatenate(p) if p else np.empty(
+        0, np.int64 if c in _INT_COLS else object)) for c, p in parts.items()}
+    if lo is None:
+        return None, out
+    return (np.concatenate(codes) if codes else np.empty(0, np.int64)), out
 
 
 class QueryTimeout(TimeoutError):
@@ -309,18 +595,20 @@ def _deadline_task(args: tuple):
         return fn(payload)
 
 
-def _exhaustive_scan(blocks: pd.DataFrame, n_docs: float, avgdl: float,
-                     k1: float, b: float, block_range: int
+def _exhaustive_scan(blocks: dict[str, np.ndarray], n_docs: float,
+                     avgdl: float, k1: float, b: float, block_range: int
                      ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(doc_id, score, nt) over every posting row — numpy-native
     mirror of make_exhaustive_kernel.  Score accumulation order is
-    the row order of the (block_id, term)-sorted frame, which is the
-    per-doc sorted-term order _score_group uses, so scores are
-    IDENTICAL to the Spark tier (a doc lives in exactly one block,
-    its contributions are term-sorted rows)."""
+    the row order of the (block_id, term)-sorted columns
+    (:meth:`LocalSearcher._blocks`), which is the per-doc sorted-term
+    order _score_group uses, so scores are IDENTICAL to the Spark
+    tier (a doc lives in exactly one block, its contributions are
+    term-sorted rows)."""
     from katta_spark.index import codec
 
-    terms, bids, dfs, gaps, tfs, dls = _np_cols(blocks)
+    bids, dfs = blocks["block_id"], blocks["df"]
+    gaps, tfs, dls = blocks["doc_gaps"], blocks["tfs"], blocks["dls"]
     if not len(bids):
         return (np.empty(0, np.int64), np.empty(0, np.float64),
                 np.empty(0, np.int64))
@@ -342,7 +630,7 @@ def _exhaustive_scan(blocks: pd.DataFrame, n_docs: float, avgdl: float,
     return uniq, summed, nt
 
 
-def _wand_scan(blocks: pd.DataFrame, n_docs: float, avgdl: float,
+def _wand_scan(blocks: dict[str, np.ndarray], n_docs: float, avgdl: float,
                k1: float, b: float, block_range: int, k: int,
                n_terms: int, mode: str, min_match: int | None = None
                ) -> tuple[np.ndarray, np.ndarray]:
@@ -357,12 +645,13 @@ def _wand_scan(blocks: pd.DataFrame, n_docs: float, avgdl: float,
     from katta_spark.index.search import _topk_merge
 
     required = n_terms if mode == "and" else max(1, int(min_match or 1))
-    terms, bids, dfs, gaps, tfs, dls = _np_cols(blocks)
+    terms, bids = blocks["term"], blocks["block_id"]
+    gaps, tfs, dls = blocks["doc_gaps"], blocks["tfs"], blocks["dls"]
     if not len(bids):
         return np.empty(0, np.int64), np.empty(0, np.float64)
-    mt = blocks["max_tf"].to_numpy().astype(np.float64)
-    md = blocks["min_dl"].to_numpy().astype(np.float64)
-    dfv = dfs.astype(np.float64)
+    mt = blocks["max_tf"].astype(np.float64)
+    md = blocks["min_dl"].astype(np.float64)
+    dfv = blocks["df"].astype(np.float64)
     idf_v = np.log(1.0 + (n_docs - dfv + 0.5) / (dfv + 0.5))
     ub_v = idf_v * (mt * (k1 + 1.0)
                     / (mt + k1 * (1.0 - b + b * md / avgdl)))
@@ -454,6 +743,21 @@ class LocalSearcher:
     ``PhysicalIndex.topk``/``count`` return on the same directory
     (tested), because both feed the same posting blocks through the
     same kernels with the same global stats.
+
+    Resident state: every postings and catalog read goes through the
+    process-wide :data:`_RESIDENT` cache of decoded row groups, kept
+    in their on-disk (term, block_id) order, so a query term's rows
+    are a binary-search slice and a df lookup is one more.  Only the
+    row groups queries touch load (their term min/max statistics pick
+    them), bounded by :data:`_RESIDENT_BUDGET` bytes per process with
+    least-recently-used eviction.  Cache keys are the files'
+    identities at open (path, size, mtime): :meth:`refresh` opens a
+    new generation whose changed files miss.  Each read first stats
+    the copy's ``stats.json``, so a copy deleted mid-session raises
+    FileNotFoundError on its next query — the infra failure a
+    ShardedSearcher fails over to a replica — even when every row it
+    needs is resident.  Stored fields (``docs``) are read from parquet
+    per query, as before.
     """
 
     # cross-shard scoring plumbing (ShardedSearcher.query): a
@@ -472,8 +776,9 @@ class LocalSearcher:
         return _DEADLINE.get()
 
     def _checked_table(self, ds, columns=None, filter=None):
-        """Stored-field / postings / catalog scan with deadline
-        checks BETWEEN record batches — TimeLimitingCollector parity
+        """Stored-field scan with deadline checks BETWEEN record
+        batches (postings and catalog reads check it per resident row
+        group, :func:`_resident_rows`) — TimeLimitingCollector parity
         for the NON-kernel surfaces (round 5; the reference bounds
         every collector including facet/group calls,
         LuceneServer.java:1555-1564).  The round-4 deadline only
@@ -507,19 +812,22 @@ class LocalSearcher:
         self._qcache = (
             _ResultCache(self._qcache_size) if qcache_size else None
         )
-        self.stats = json.loads((root / "stats.json").read_text())
+        self._stats_path = root / "stats.json"
+        self.stats = json.loads(self._stats_path.read_text())
         self._postings = pa_ds.dataset(
             str(root / "postings"), partitioning="hive"
         )
         self._docs = pa_ds.dataset(str(root / "docs"), partitioning="hive")
-        self._terms = pa_ds.dataset(str(root / "terms"))
+        # this generation's postings and catalog files, by identity:
+        # the keys of their resident row groups
+        self._pfiles = _file_ids(self._postings.files)
+        self._tfiles = _file_ids(pa_ds.dataset(str(root / "terms")).files)
         self._tomb = self._load_tombstones(root)
         # lazy caches MUST reset here so refresh() (which re-runs
         # __init__) invalidates them — a handle that answered '*:*'
-        # or a wildcard before a delete+commit would otherwise keep
-        # serving the pre-refresh doc set / term catalog forever
+        # before a delete+commit would otherwise keep serving the
+        # pre-refresh doc set forever
         self._all_ids_cache: np.ndarray | None = None
-        self._catalog_cache: pd.DataFrame | None = None
         self._commits = sorted(set(commits)) if commits else None
         if self._commits:
             self._snapshot(root)
@@ -541,6 +849,8 @@ class LocalSearcher:
                 f"unknown commit(s) {missing}; index has {sorted(known)}"
             )
         cf = pa_ds.field("commit").isin(self._commits)
+        self._pfiles = _file_ids(
+            f.path for f in self._postings.get_fragments(filter=cf))
         self._postings = self._postings.filter(cf)
         self._docs = self._docs.filter(cf)
         self._tomb = None
@@ -565,12 +875,16 @@ class LocalSearcher:
         a LocalSearcher binds the dataset listing, stats and
         tombstones seen at open; after a new commit, delete, or
         compaction, refresh() re-opens them so the new state becomes
-        visible (tested).  NOTE: unlike a true Lucene point-in-time
-        reader, an un-refreshed handle is not guaranteed to keep
-        serving the old snapshot after a commit — the terms catalog
-        is rewritten in place, so catalog-dependent queries may fail
-        until refresh (the same staleness rule as the Spark tier).
-        A commit-pinned handle re-pins to the SAME commits."""
+        visible (tested).  The reopen is a new generation: the file
+        identities are taken again, so a rewritten catalog or
+        compacted postings file misses the resident cache and loads
+        fresh, while untouched files stay resident.  NOTE: unlike a
+        true Lucene point-in-time reader, an un-refreshed handle is
+        not guaranteed to keep serving the old snapshot after a
+        commit — the terms catalog is rewritten in place, so a
+        catalog read that is not resident fails until refresh (the
+        same staleness rule as the Spark tier).  A commit-pinned
+        handle re-pins to the SAME commits."""
         self.__init__(self.index_dir, self._commits,
                       qcache_size=self._qcache_size)
         return self
@@ -579,10 +893,15 @@ class LocalSearcher:
         """Per-node operational counters — the reference nodes report
         query throughput and cache stats to a metrics registry
         (Katta's node metrics + Solr cache MBeans).  Pure in-memory
-        reads, no I/O."""
+        reads, no I/O.  The ``resident_*`` / ``rowgroup_*`` counters
+        are this PROCESS's resident cache, shared by all its
+        handles."""
         c = self._qcache
         total = (c.hits + c.misses) if c else 0
         return {
+            "resident_bytes": _RESIDENT.bytes,
+            "rowgroup_hits": _RESIDENT.hits,
+            "rowgroup_misses": _RESIDENT.misses,
             "index_dir": self.index_dir,
             "n_docs": int(self.stats["n_docs"]),
             "commits": list(self.stats.get("commits") or []),
@@ -636,35 +955,57 @@ class LocalSearcher:
 
     # ---------------------------------------------------------- plumbing
 
-    def _blocks(self, terms: list[str]) -> pd.DataFrame:
-        """Posting blocks of the query terms + their global df —
-        one row-group-pruned read of postings, one of the catalog
-        (skipped for the terms a _global_view override already
-        carries); ordered (block_id, term) exactly like the Spark
-        path's sortWithinPartitions so the shared kernels see
-        identical group boundaries."""
-        if not terms:
-            return pd.DataFrame(columns=_BLOCK_COLS + ["df"])
-        pred = pa_ds.field("term").isin(terms)
-        cols = _BLOCK_COLS + (["n"] if self._commits else [])
-        pdf = self._postings.to_table(
-            columns=cols, filter=pred
-        ).to_pandas()
-        if self._commits:
-            # snapshot df: the global terms parquet spans ALL commits,
-            # so the pinned catalog is the sum of the pinned blocks'
-            # per-block doc counts (exactly the Spark tier's rule)
-            cat = self._with_override(
-                pdf.groupby("term", as_index=False)["n"].sum().rename(
-                    columns={"n": "df"}
-                ), terms,
-            )
-            pdf = pdf.drop(columns=["n"])
-        else:
-            cat = self._df_for(terms)
-        out = pdf.merge(cat, on="term")
-        return out.sort_values(["block_id", "term"],
-                               kind="mergesort", ignore_index=True)
+    def _read(self, files: list[_FileId], cols: tuple, lo=None, hi=None,
+              side: str = "right"):
+        """:func:`_resident_rows` over this handle's files, after one
+        stat of the copy: a deleted copy raises FileNotFoundError here
+        even when every row it needs is resident."""
+        os.stat(self._stats_path)
+        return _resident_rows(files, cols, lo, hi, side)
+
+    def _rows(self, files: list[_FileId], terms: list[str],
+              cols: tuple) -> tuple[np.ndarray, dict[str, np.ndarray]]:
+        """(term index, {col: array}) of the rows of ``files`` whose
+        term is in the sorted, unique ``terms``, in file order."""
+        q = np.asarray(terms, dtype=object)
+        return self._read(files, cols, q, q)
+
+    def _blocks(self, terms: list[str],
+                cols: tuple = _BLOCK_COLS) -> dict[str, np.ndarray]:
+        """Posting rows of the query terms + their df as numpy columns
+        (``term`` is the index into the sorted, unique term list, and
+        a term without a df drops out) ordered (block_id, term) exactly
+        like the Spark path's sortWithinPartitions, so the shared
+        kernels see identical group boundaries."""
+        terms = sorted(set(terms))
+        codes, rows = self._rows(self._pfiles, terms,
+                                 tuple(c for c in cols if c != "term"))
+        df = self._dfs(terms)[codes]
+        live = np.nonzero(df > 0)[0]
+        sel = live[np.lexsort((codes[live], rows["block_id"][live]))]
+        out = {c: v[sel] for c, v in rows.items()}
+        out.update(term=codes[sel], df=df[sel])
+        return out
+
+    def _dfs(self, terms: list[str]) -> np.ndarray:
+        """df of each of the sorted, unique ``terms`` (0 when absent)
+        under this handle's rules: the merged-catalog override of a
+        _global_view first, else the global terms catalog — or, on a
+        commit-pinned (PIT) handle, the pinned postings' per-block doc
+        counts (the global catalog spans ALL commits)."""
+        ov = self._df_override or {}
+        local = [t for t in terms if t not in ov]
+        out = np.array([ov.get(t, 0) for t in terms], dtype=np.int64)
+        if local:
+            files, col = ((self._pfiles, "n") if self._commits
+                          else (self._tfiles, "df"))
+            codes, rows = self._rows(files, local, (col,))
+            got = np.bincount(codes, weights=rows[col],
+                              minlength=len(local)).astype(np.int64)
+            pos = np.searchsorted(np.asarray(terms, dtype=object),
+                                  np.asarray(local, dtype=object))
+            out[pos] = got
+        return out
 
     def _mask_tomb(self, ids: np.ndarray,
                    *others: np.ndarray) -> tuple[np.ndarray, ...]:
@@ -741,19 +1082,12 @@ class LocalSearcher:
         fall back to the exhaustive decode, same answer."""
         if not terms:
             return 0
-        if "id_bits" in set(self._postings.schema.names):
-            pdf = self._checked_table(
-                self._postings,
-                columns=["term", "block_id", "id_bits"],
-                filter=pa_ds.field("term").isin(terms),
-            ).to_pandas()
-            if not pdf["id_bits"].isna().any():
-                from katta_spark.index.codec import bit_count_frame
+        pdf = self._bit_rows(terms)
+        if pdf is not None:
+            from katta_spark.index.codec import bit_count_frame
 
-                return bit_count_frame(
-                    pdf, len(terms), mode, self._tomb,
-                    int(self.stats["block_range"]),
-                )
+            return bit_count_frame(pdf, len(terms), mode, self._tomb,
+                                   int(self.stats["block_range"]))
         ids, _, nt = self._scored(terms)
         if mode == "and" and len(terms) > 1:
             return int(np.count_nonzero(nt == len(terms)))
@@ -817,23 +1151,28 @@ class LocalSearcher:
         terms = sorted(set(strip_stops(self.stats, qterms)))
         if not terms:
             return np.empty(0, dtype=np.int64)
-        if "id_bits" in set(self._postings.schema.names):
-            pdf = self._checked_table(
-                self._postings,
-                columns=["term", "block_id", "id_bits"],
-                filter=pa_ds.field("term").isin(terms),
-            ).to_pandas()
-            if not pdf["id_bits"].isna().any():
-                from katta_spark.index.codec import bit_matched_frame
+        pdf = self._bit_rows(terms)
+        if pdf is not None:
+            from katta_spark.index.codec import bit_matched_frame
 
-                return bit_matched_frame(
-                    pdf, len(terms), mode, self._tomb,
-                    int(self.stats["block_range"]),
-                )
+            return bit_matched_frame(pdf, len(terms), mode, self._tomb,
+                                     int(self.stats["block_range"]))
         ids, _, nt = self._scored(terms)
         if mode == "and" and len(terms) > 1:
             ids = ids[nt == len(terms)]
         return np.sort(ids)
+
+    def _bit_rows(self, terms: list[str]) -> pd.DataFrame | None:
+        """(term, block_id, id_bits) frame of the sorted, unique
+        terms' posting rows (``term`` as the term's index) — None
+        when any row lacks a bitset (a layout or commit written
+        before the ``id_bits`` column), so the caller decodes
+        instead, same answer."""
+        codes, rows = self._rows(self._pfiles, terms,
+                                 ("block_id", "id_bits"))
+        if pd.isna(rows["id_bits"]).any():
+            return None
+        return pd.DataFrame({"term": codes, **rows})
 
     def _docs_subset(self, ids: np.ndarray,
                      cols: list[str]) -> pd.DataFrame:
@@ -1169,22 +1508,14 @@ class LocalSearcher:
 
     def suggest(self, prefix: str, n: int = 10) -> list[tuple[str, int]]:
         """[(term, df)] — autocomplete at node latency: the n
-        highest-df content terms with the prefix, from one
-        row-group-pruned catalog read (the term-sorted files make the
-        startswith range two binary searches over row-group stats).
+        highest-df content terms with the prefix, from one slice of
+        the resident catalog (the term-sorted files make the
+        startswith range two binary searches).
         Mirrors PhysicalIndex.suggest (tested).  On a commit-pinned
         handle the dfs come from the PIT catalog (recomputed from the
         pinned postings — see _catalog), not the live terms parquet."""
         p = prefix.lower()
-        if self._commits:
-            cat = self._catalog()
-            cat = cat[cat["term"] >= p]
-        else:
-            pred = ((pa_ds.field("term") >= p)
-                    & (pa_ds.field("term") < p + "￿"))
-            cat = self._terms.to_table(
-                columns=["term", "df"], filter=pred
-            ).to_pandas()
+        cat = self._catalog(p)
         keep = cat["term"].str.startswith(p)
         if ":" not in p:
             keep &= ~cat["term"].str.contains(":", regex=False)
@@ -1274,53 +1605,10 @@ class LocalSearcher:
         return ids, scores
 
     def _df_for(self, terms: list[str]) -> pd.DataFrame:
-        """(term, df) for arbitrary terms under this handle's rules —
-        the same catalog source _blocks uses: global terms parquet
-        normally, per-block doc-count sums on a commit-pinned (PIT)
-        handle, the merged-catalog override under a scatter (the
-        local catalog is then read only for the terms the override
-        lacks — a visible fallback, never a crash)."""
-        ov = self._df_override or {}
-        local = [t for t in terms if t not in ov]
-        cat = None
-        if len(local) > 4096 and not self._commits:
-            # big-vocab path (significant_terms foregrounds): the
-            # full two-column catalog read + a pandas hash filter
-            # beats an isin scan filter with 10^5 values
-            t = self._terms.to_table(columns=["term", "df"]).to_pandas()
-            cat = t[t["term"].isin(set(local))]
-        elif local and self._commits:
-            pdf = self._postings.to_table(
-                columns=["term", "n"],
-                filter=pa_ds.field("term").isin(local),
-            ).to_pandas()
-            cat = pdf.groupby("term", as_index=False)["n"].sum().rename(
-                columns={"n": "df"}
-            )
-        elif local:
-            cat = self._terms.to_table(
-                columns=["term", "df"],
-                filter=pa_ds.field("term").isin(local),
-            ).to_pandas()
-        return self._with_override(cat, terms)
-
-    def _with_override(self, cat: pd.DataFrame | None,
-                       terms: list[str]) -> pd.DataFrame:
-        """``cat`` (local (term, df) rows, None when none were read)
-        with the cross-shard merged df wherever the _global_view
-        override has the term."""
-        ov = self._df_override
-        got = [t for t in terms if t in ov] if ov else []
-        if not got:
-            return pd.DataFrame(columns=["term", "df"]) if cat is None \
-                else cat
-        rows = pd.DataFrame({"term": got, "df": np.array(
-            [ov[t] for t in got], dtype=np.int64)})
-        if cat is not None and len(cat):
-            cat = cat[~cat["term"].isin(got)]
-            if len(cat):
-                return pd.concat([cat, rows], ignore_index=True)
-        return rows
+        """(term, df) rows, term-sorted, for the ``terms`` this
+        handle's catalog knows — :meth:`_dfs` as a frame."""
+        terms = sorted(set(terms))
+        return _df_frame(terms, self._dfs(terms))
 
     def _collapse_heads(self, qterms: list[str], field: str,
                         mode: str = "or") -> pd.DataFrame:
@@ -1423,85 +1711,76 @@ class LocalSearcher:
         to keep the histogram identical to the stored path."""
         import pyarrow as pa
 
-        if "id_bits" not in set(self._postings.schema.names):
-            return None
-        tb = self._checked_table(
-            self._postings, columns=["term", "block_id", "id_bits"]
-        )
-        if tb.num_rows == 0:
-            return pa.table({"term": pa.array([], pa.string()),
-                             "df_fg": pa.array([], pa.int64())})
-        col = tb["id_bits"].combine_chunks()
-        if col.null_count:
-            return None
         br = int(self.stats["block_range"])
         nbytes = br // 8
-        bids = tb["block_id"].to_numpy().astype(np.int64)
-        # one flat bitset over the whole doc-id space (n_docs/8
-        # bytes), sized to cover every block the postings touch
-        span_bytes = (int(bids.max()) + 1) * nbytes
-        bits = np.zeros(span_bytes * 8, dtype=np.uint8)
+        # one flat bitset over the matched blocks' doc-id range, and
+        # which blocks hold a matched doc: rows in other blocks
+        # contribute 0 (a rare foreground touches a handful of blocks
+        # — this cuts the byte stream to ~its posting geometry)
+        mblk = np.zeros(int(ids.max()) // br + 1, dtype=bool)
+        mblk[ids // br] = True
+        bits = np.zeros(mblk.size * br, dtype=np.uint8)
         bits[ids] = 1
         full = np.packbits(bits, bitorder="little")
-        # flat view of the binary column: offsets + data buffers
-        if pa.types.is_large_binary(col.type):
-            odt = np.int64
-        else:
-            odt = np.int32
-        offs = np.frombuffer(col.buffers()[1], dtype=odt)[
-            col.offset: col.offset + len(col) + 1
-        ].astype(np.int64)
-        data = np.frombuffer(col.buffers()[2], dtype=np.uint8)
-        all_lens = offs[1:] - offs[:-1]
-        # prefilter: rows in blocks with NO matched doc contribute 0
-        # (a rare foreground touches a handful of blocks — this cuts
-        # the byte stream to ~its posting geometry)
-        mblk = np.zeros(int(bids.max()) + 1, dtype=bool)
-        mblk[(ids // br).astype(np.int64)] = True
-        keep = mblk[bids]
-        terms_pd = tb["term"].to_pandas()[keep]
-        bids_k, lens, starts = bids[keep], all_lens[keep], offs[:-1][keep]
-        total = int(lens.sum())
-        if total:
-            # per-byte mask index = arange + repeat(combined offset):
-            # block base minus the row's position in the output
-            # stream (one repeat instead of row_of + within)
-            out_start = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            gidx = np.arange(total, dtype=np.int64) + np.repeat(
-                bids_k * nbytes - out_start, lens
-            )
-            # gather the rows' bytes (rows are no longer contiguous
-            # after the prefilter)
-            vidx = np.arange(total, dtype=np.int64) + np.repeat(
-                starts - out_start, lens
-            )
-            masked = data[vidx] & full[gidx]
-            # per-BYTE popcount via uint64 SWAR (each byte lane ends
-            # up holding its own bit count — 3 vector ops instead of
-            # a 13 MB table gather)
-            pad = (-masked.size) % 8
-            if pad:
-                masked = np.concatenate(
-                    [masked, np.zeros(pad, np.uint8)]
+        os.stat(self._stats_path)
+        terms_k, counts = [], []
+        for ch in _resident_chunks(self._pfiles,
+                                   ("term", "block_id", "id_bits")):
+            ti, bids, col = ch["term"], ch["block_id"], ch["id_bits"]
+            if col.valid is not None and not col.valid.all():
+                return None
+            keep = bids < mblk.size
+            keep[keep] = mblk[bids[keep]]
+            rows = np.nonzero(keep)[0]
+            if not rows.size:
+                continue
+            bids_k = bids[rows].astype(np.int64)
+            starts = col.offs[rows]
+            lens = col.offs[rows + 1] - starts
+            total = int(lens.sum())
+            per_row = np.zeros(rows.size, dtype=np.int32)
+            if total:
+                # per-byte index = arange + repeat(combined offset):
+                # the row's data (or block base) minus its place in
+                # the output stream
+                out_start = np.cumsum(lens) - lens
+                data = np.frombuffer(col.data, dtype=np.uint8)
+                ar = np.arange(total, dtype=np.int64)
+                masked = (data[ar + np.repeat(starts - out_start, lens)]
+                          & full[ar + np.repeat(bids_k * nbytes - out_start,
+                                                lens)])
+                # per-BYTE popcount via uint64 SWAR (each byte lane
+                # ends up holding its own bit count — 3 vector ops
+                # instead of a table gather)
+                pad = (-masked.size) % 8
+                if pad:
+                    masked = np.concatenate(
+                        [masked, np.zeros(pad, np.uint8)]
+                    )
+                v = masked.view(np.uint64)
+                v = v - ((v >> np.uint64(1))
+                         & np.uint64(0x5555555555555555))
+                v = ((v & np.uint64(0x3333333333333333))
+                     + ((v >> np.uint64(2))
+                        & np.uint64(0x3333333333333333)))
+                v = (v + (v >> np.uint64(4))) & np.uint64(
+                    0x0F0F0F0F0F0F0F0F)
+                bytepop = v.view(np.uint8)[: total].astype(np.int32)
+                per_row = np.add.reduceat(
+                    bytepop, np.minimum(out_start, total - 1)
                 )
-            v = masked.view(np.uint64)
-            v = v - ((v >> np.uint64(1))
-                     & np.uint64(0x5555555555555555))
-            v = ((v & np.uint64(0x3333333333333333))
-                 + ((v >> np.uint64(2))
-                    & np.uint64(0x3333333333333333)))
-            v = (v + (v >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-            bytepop = v.view(np.uint8)[: total].astype(np.int32)
-            per_row = np.add.reduceat(
-                bytepop, np.minimum(out_start, total - 1)
-            )
-            # reduceat quirk: a zero-length row repeats its
-            # neighbour's slice — zero them explicitly
-            per_row[lens == 0] = 0
-        else:
-            per_row = np.zeros(len(lens), dtype=np.int32)
+                # reduceat quirk: a zero-length row repeats its
+                # neighbour's slice — zero them explicitly
+                per_row[lens == 0] = 0
+            terms_k.append(ti.rows(rows))
+            counts.append(per_row)
+        if not terms_k:
+            return pa.table({"term": pa.array([], pa.string()),
+                             "df_fg": pa.array([], pa.int64())})
+        terms_k = np.concatenate(terms_k)
+        per_row = np.concatenate(counts)
         cand = pd.DataFrame({
-            "term": terms_pd.to_numpy(), "df_fg": per_row,
+            "term": terms_k, "df_fg": per_row,
         })
         cand = cand[cand["df_fg"] > 0]
         # drop field-prefixed terms: not content tokens
@@ -1779,35 +2058,27 @@ class LocalSearcher:
             host._all_ids_cache = ids
         return host._all_ids_cache
 
-    def _catalog(self) -> pd.DataFrame:
-        """(term, df) catalog, cached — the multi-term expansion
-        dictionary (FuzzyQuery/Wildcard rewrite runs here, one row
-        per distinct term, never over postings).  Refuses on a
-        commit-pinned handle: the global terms parquet spans ALL
-        commits, so its dfs would silently leak post-snapshot state
-        into expansion scoring (term queries recompute the pinned df
-        from the pruned blocks instead — see _blocks)."""
-        host = self._cache_host or self
-        if getattr(host, "_catalog_cache", None) is None:
-            if host._commits:
-                # PIT catalog: the global terms parquet spans ALL
-                # commits, so the snapshot catalog is recomputed from
-                # the PINNED postings' per-block doc counts — one
-                # (term, n) column read of the pruned partitions, the
-                # same device _blocks uses per-query, amortized here
-                # across every expansion the pinned handle answers
-                t = self._checked_table(
-                    host._postings, columns=["term", "n"]
-                ).to_pandas()
-                host._catalog_cache = (
-                    t.groupby("term", as_index=False)["n"].sum()
-                    .rename(columns={"n": "df"})
-                )
-            else:
-                host._catalog_cache = self._checked_table(
-                    host._terms, columns=["term", "df"]
-                ).to_pandas()
-        return host._catalog_cache
+    def _catalog(self, prefix: str | None = None) -> pd.DataFrame:
+        """(term, df) catalog — the multi-term expansion dictionary
+        (FuzzyQuery/Wildcard rewrite runs here, one row per distinct
+        term, never over postings) — or, with ``prefix``, its slice
+        [prefix, prefix + U+FFFF), from resident row groups.  On a
+        commit-pinned handle it is recomputed from the PINNED
+        postings' per-block doc counts: the global terms parquet
+        spans ALL commits, so its dfs would silently leak
+        post-snapshot state into expansion scoring."""
+        files, col = ((self._pfiles, "n") if self._commits
+                      else (self._tfiles, "df"))
+        if prefix is None:
+            _, rows = self._read(files, ("term", col))
+        else:
+            _, rows = self._read(
+                files, ("term", col), np.array([prefix], dtype=object),
+                np.array([prefix + "\uffff"], dtype=object), side="left")
+        cat = pd.DataFrame({"term": rows["term"], "df": rows[col]})
+        if self._commits:
+            cat = cat.groupby("term", as_index=False)["df"].sum()
+        return cat
 
     def scored_set(self, qterms: list[str], mode: str = "or",
                    min_match: int | None = None) -> Res:
@@ -1836,37 +2107,21 @@ class LocalSearcher:
         if not self.stats.get("positions"):
             raise ValueError("phrase serving needs positional postings")
         terms = sorted(set(words))
-        tpred = pa_ds.field("term").isin(terms)
         # bitset pre-filter (round 4): a phrase needs ALL words in
         # the SAME doc, so only blocks where the words' doc-bitsets
         # intersect can produce a match — restrict the (expensive)
-        # positional read + decode to those blocks.  _matched_ids
-        # takes the id_bits fast path and already applies tombstones;
-        # on rare co-occurrence this skips almost every block.
+        # positional decode to those blocks.  _matched_ids takes the
+        # id_bits fast path and already applies tombstones; on rare
+        # co-occurrence this skips almost every block.
         cand = self._matched_ids(terms, "and")
         if not cand.size:
             return np.empty(0, np.int64), np.empty(0, np.float64)
-        br = int(self.stats["block_range"])
-        blocks_ok = np.unique(cand // br)
-        # only pay the isin when it actually prunes: on a HOT
-        # co-occurring pair nearly every block is a candidate and a
-        # thousands-entry isin costs more than the rows it skips
-        # (measured +16% on `parse request`; -34% on `order fast`)
-        n_blocks = -(-int(self.stats["n_docs"]) // br)
-        pred = tpred
-        if blocks_ok.size < 0.3 * n_blocks:
-            pred = tpred & pa_ds.field("block_id").isin(
-                [int(b) for b in blocks_ok]
-            )
-        pdf = self._postings.to_table(
-            columns=_POS_COLS, filter=pred
-        ).to_pandas()
-        cat = self._with_override(self._terms.to_table(
-            columns=["term", "df"], filter=tpred
-        ).to_pandas(), terms)
-        blocks = pdf.merge(cat, on="term").sort_values(
-            ["block_id", "term"], kind="mergesort", ignore_index=True
-        )
+        rows = self._blocks(terms, _POS_COLS)
+        keep = np.isin(rows["block_id"],
+                       np.unique(cand // int(self.stats["block_range"])))
+        blocks = pd.DataFrame({c: v[keep] for c, v in rows.items()})
+        blocks["term"] = np.asarray(terms, dtype=object)[
+            blocks["term"].to_numpy()]
         kern = make_phrase_kernel(
             list(words), float(self.stats["n_docs"]), self.stats["avgdl"],
             self.stats["k1"], self.stats["b"], self.stats["block_range"],
@@ -1980,6 +2235,13 @@ class LocalSearcher:
 # ---------------------------------------------------------------------------
 # Node-local boolean evaluator — numpy mirror of fulltext.luceval
 # ---------------------------------------------------------------------------
+
+def _df_frame(terms: list[str], df: np.ndarray) -> pd.DataFrame:
+    """(term, df) rows of the sorted ``terms`` whose df is positive."""
+    keep = df > 0
+    return pd.DataFrame({"term": np.asarray(terms, dtype=object)[keep],
+                         "df": df[keep]})
+
 
 def _stats_finalize(partials: list[tuple]) -> dict:
     """Merge (n, min, max, sum) shard partials into the
@@ -2695,6 +2957,15 @@ class ShardedSearcher:
     adjacency_matrix, ngroups and the significant_terms foreground
     skip it; the suggesters and spellcheck read catalogs only.
 
+    Resident state: the parent's shard handles answer the df exchange
+    from the process's resident catalog row groups (see
+    :class:`LocalSearcher`) — a lookup per shard, no scan.  Each forked
+    worker holds its own resident cache of the postings it served,
+    bounded by the same per-process budget, so the handle's processes
+    hold up to (workers + 1) × :data:`_RESIDENT_BUDGET`.  A shard copy
+    deleted mid-session fails its next call with FileNotFoundError
+    (each read stats the copy) and fails over to a replica.
+
     100 TB shape: per-shard reads stay term-pruned (row-group stats),
     the exchange is O(query terms × shards) catalog rows; shards can
     live on different machines behind any RPC fan-out — this class is
@@ -2800,7 +3071,9 @@ class ShardedSearcher:
         so after a new commit, delete, or compaction the pool must be
         recreated for scattered queries to see the new state.  The
         parent's inline-path cache entries are dropped too (forked
-        children inherit the parent's module globals)."""
+        children inherit the parent's module globals).  Each reopened
+        handle is a new generation: rewritten files miss the resident
+        cache, unchanged ones stay resident."""
         dirs = [s.index_dir for s in self.shards]
         keep = (self._n_scatters, self._n_retries, self._n_failures,
                 self._n_failovers)
@@ -3031,10 +3304,12 @@ class ShardedSearcher:
         Lifetime counters survive refresh().  ``per_shard`` reads
         THIS process's shard handles, which serve the parent-side
         reads (df exchange, suggest, fetch, term vectors) and the
-        inline single-shard path.  Every other per-shard call runs
-        through :func:`_shard_call` in a forked pool worker with its
-        own shard handles and result caches, which this snapshot does
-        not aggregate."""
+        inline single-shard path; their ``resident_*`` /
+        ``rowgroup_*`` counters are this process's resident cache.
+        Every other per-shard call runs through :func:`_shard_call`
+        in a forked pool worker with its own shard handles, result
+        caches and resident cache, which this snapshot does not
+        aggregate."""
         return {
             "shards_total": len(self.shards),
             "n_scatters": self._n_scatters,
@@ -3158,47 +3433,19 @@ class ShardedSearcher:
                 self._promote(s.index_dir, alts[0], alts[1:])
 
     def _read_shards(self, fn) -> list:
-        """Parent-side read of every shard's files (df exchange,
-        suggest): pure pyarrow scans, which DO parallelize under
-        threads, each replica-aware through :meth:`_robust_read`."""
-        if len(self.shards) == 1:
-            return [self._robust_read(0, fn)]
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(len(self.shards), 32)
-        ) as ex:
-            return list(ex.map(lambda j: self._robust_read(j, fn),
-                               range(len(self.shards))))
+        """Parent-side read of every shard (df exchange, suggest),
+        each replica-aware through :meth:`_robust_read` — lookups in
+        the resident cache, so a plain loop."""
+        return [self._robust_read(j, fn) for j in range(len(self.shards))]
 
     def _merged_cat(self, terms: list[str]) -> pd.DataFrame:
-        """The getDocFreqs() exchange: per-shard catalog reads for
-        the query terms, df summed corpus-wide.  Past a few thousand
-        terms (a significant_terms foreground vocabulary, not a
-        query) the isin scan filter costs more than the data: read
-        the full two-column catalog and hash-filter in pandas
-        instead — measured the difference at 4M docs where the
-        big-vocab exchange dominated the scatter."""
-        if len(terms) > 4096:
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            vset = pa.array(sorted(set(terms)))
-
-            def one(s: "LocalSearcher") -> pd.DataFrame:
-                t = s._terms.to_table(columns=["term", "df"])
-                return t.filter(
-                    pc.is_in(t["term"], value_set=vset)
-                ).to_pandas()
-        else:
-            pred = pa_ds.field("term").isin(terms)
-
-            def one(s: "LocalSearcher") -> pd.DataFrame:
-                return s._terms.to_table(
-                    columns=["term", "df"], filter=pred).to_pandas()
-
-        cats = self._read_shards(one)
-        return pd.concat(cats).groupby("term", as_index=False)["df"].sum()
+        """The getDocFreqs() exchange: each shard handle's resident
+        df lookup for the terms, summed corpus-wide (disjoint doc
+        sets) — (term, df) rows, term-sorted, for the terms some shard
+        holds."""
+        terms = sorted(set(terms))
+        return _df_frame(terms, sum(self._read_shards(
+            lambda s: s._dfs(terms))))
 
     def _view(self, cat: pd.DataFrame) -> tuple:
         """A dispatcher view from a merged catalog: (n_docs, avgdl,
@@ -3591,17 +3838,11 @@ class ShardedSearcher:
 
     def suggest(self, prefix: str, n: int = 10) -> list[tuple[str, int]]:
         """Scatter-gather autocomplete: per-shard prefix slices of
-        the term catalogs (parent-side threaded reads — pure pyarrow
-        scans), dfs summed per term (disjoint doc sets), one global
-        (df desc, term asc) cut — identical to the union index's
-        suggest (tested)."""
+        the resident term catalogs (parent-side reads), dfs summed per
+        term (disjoint doc sets), one global (df desc, term asc) cut —
+        identical to the union index's suggest (tested)."""
         p = prefix.lower()
-        pred = (pa_ds.field("term") >= p) & (pa_ds.field("term") < p + "￿")
-        cat = pd.concat(self._read_shards(
-            lambda s: s._terms.to_table(
-                columns=["term", "df"], filter=pred
-            ).to_pandas()
-        ))
+        cat = pd.concat(self._read_shards(lambda s: s._catalog(p)))
         keep = cat["term"].str.startswith(p)
         if ":" not in p:
             keep &= ~cat["term"].str.contains(":", regex=False)

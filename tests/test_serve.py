@@ -378,8 +378,9 @@ def test_serve_commit_pinned_snapshot(spark, tmp_path):
 
 def test_pinned_handle_answers_catalog_expansions(spark, tmp_path):
     """PIT catalog expansion (round-2 verdict item 5): a commit-pinned
-    handle answers wildcard/fuzzy/suggest from the SNAPSHOT catalog
-    (recomputed from the pinned postings' per-block doc counts), and
+    handle answers wildcard/fuzzy/suggest and scores phrases from the
+    SNAPSHOT catalog (recomputed from the pinned postings' per-block
+    doc counts), and
     the answers equal an index built from only those commits."""
     from pyspark.sql import functions as F
 
@@ -400,7 +401,10 @@ def test_pinned_handle_answers_catalog_expansions(spark, tmp_path):
 
     pinned = LocalSearcher(d, commits=["c1"])
     only = LocalSearcher(d1)
-    for q in ("im*", "impart~2", "/sc.n/", "im* AND return"):
+    # quoted phrases score with the snapshot dfs too, not the global
+    # terms parquet that also counts c2
+    for q in ("im*", "impart~2", "/sc.n/", "im* AND return",
+              '"import os"', '"return result"'):
         got = [(doc, round(s, 9)) for doc, s in pinned.query(q, k=10)]
         want = [(doc, round(s, 9)) for doc, s in only.query(q, k=10)]
         assert got == want, q

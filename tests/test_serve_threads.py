@@ -3,17 +3,21 @@ concurrent users.  Four threads share a LocalSearcher and four share a
 ShardedSearcher, all at once, each sending a shuffled mix of top-k,
 count, Lucene-string query, facet and field-sorted requests.  Every
 top-k and count answer must equal the pure-Python BM25 oracle; every
-other answer must equal the single-threaded one."""
+other answer must equal the single-threaded one.  The ``evict`` run
+shrinks the resident-cache budget to a few KB, so every answer is
+read through eviction."""
 
 import random
 import sys
 import threading
+from pathlib import Path
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from katta_spark.corpus import synthetic_corpus, with_ingest_columns
-from katta_spark.index import build_index
+from katta_spark.index import build_index, serve
 from katta_spark.index.serve import LocalSearcher, ShardedSearcher
 
 from tests.oracle import PyBM25
@@ -33,6 +37,8 @@ QUERY = ["(import OR table) AND scan", "import -table", "scan OR merg*"]
 FACET = [(["import"], "or"), (["scan", "merge"], "and")]
 SORTED = [(["table"], "or"), (["import", "return"], "or")]
 SORT_COLS = [("lang", "asc"), ("dl", "desc")]
+#: resident-cache budget of the ``evict`` run — far below one row group
+EVICT_BUDGET = 4096
 
 
 @pytest.fixture(scope="module")
@@ -94,9 +100,15 @@ def _check(oracle, kind, x, got, single):
     return None
 
 
-@pytest.mark.parametrize("cache", [0, 256])
-def test_threads_share_one_handle(indexes, cache):
+@pytest.mark.parametrize("cache", [0, 256, "evict"])
+def test_threads_share_one_handle(indexes, cache, monkeypatch):
     da, db, du, oracle = indexes
+    evict = cache == "evict"
+    if evict:
+        # set before any handle or scatter pool exists: the forked
+        # workers inherit the budget too
+        monkeypatch.setattr(serve, "_RESIDENT_BUDGET", EVICT_BUDGET)
+        cache = 0
     local = LocalSearcher(du, qcache_size=cache)
     sharded = ShardedSearcher([da, db], scache_size=cache)
     ref_local = LocalSearcher(du, qcache_size=0)
@@ -109,6 +121,8 @@ def test_threads_share_one_handle(indexes, cache):
                                (sharded, ref_sharded))}
         misses: list[str] = []
         errors: list[Exception] = []
+        resident: list[int] = []
+        loads0 = local.node_metrics()["rowgroup_misses"]
 
         def client(h, seed):
             reqs = _requests() * ROUNDS
@@ -122,6 +136,7 @@ def test_threads_share_one_handle(indexes, cache):
                     continue
                 if bad:
                     misses.append(bad)
+                resident.append(local.node_metrics()["resident_bytes"])
 
         threads = [threading.Thread(target=client, args=(h, i))
                    for i, h in enumerate([local] * THREADS
@@ -138,6 +153,17 @@ def test_threads_share_one_handle(indexes, cache):
         assert not any(t.is_alive() for t in threads)
         assert not errors, repr(errors[0])
         assert not misses, misses[:3]
+        if evict:
+            # every access trims to the budget, so the cache never
+            # holds more than it (let alone budget + one row group)
+            assert max(resident) <= EVICT_BUDGET
+            # and the run re-read row groups it had evicted: more
+            # loads than the union index has row groups
+            n_rgs = sum(pq.ParquetFile(f).num_row_groups
+                        for sub in ("postings", "terms")
+                        for f in Path(du, sub).rglob("*.parquet"))
+            loads = local.node_metrics()["rowgroup_misses"] - loads0
+            assert loads > n_rgs, (loads, n_rgs)
     finally:
         sharded.close()
         ref_sharded.close()

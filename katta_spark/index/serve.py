@@ -226,6 +226,13 @@ def _collect_plain_terms(stats: dict, fields: set, analyzers: dict,
 #: — decoded postings and catalog row groups beyond it are evicted
 #: least-recently-used first.  One budget per PROCESS: every handle in
 #: it shares the cache, and each forked scatter worker holds its own.
+#: Sized from measurement: a 65,536-doc union node (perfbench corpus)
+#: holds 69 MB of decoded postings + catalog once all seven perfbench
+#: query classes have run, so 256 MiB keeps a node of ~240k docs
+#: whole, and a 4-worker ShardedSearcher's worst case, (workers + 1)
+#: x budget, stays near 1.25 GiB.  Past the budget a query's missing
+#: row groups decode side by side, which costs about what one
+#: filtered parquet read of them costs.
 _RESIDENT_BUDGET = 256 << 20
 
 #: integer columns of the postings / terms files (an empty read keeps
@@ -273,18 +280,14 @@ class _Terms(NamedTuple):
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        n = len(arr)
-        if n > 1 and not pc.all(pc.less_equal(
-                arr.slice(0, n - 1), arr.slice(1))).as_py():
-            # every writer sorts within its files; the slices rely on it
+        runs = pc.run_end_encode(arr, run_end_type=pa.int64())
+        uterms = runs.values.to_numpy(zero_copy_only=False)
+        # the runs' terms strictly rise iff the rows are sorted; every
+        # writer sorts within its files, and the slices rely on it
+        if not (uterms[1:] > uterms[:-1]).all():
             raise ValueError(f"{path}: rows are not sorted by term")
-        brk = (np.nonzero(pc.not_equal(arr.slice(1), arr.slice(0, n - 1))
-                          .to_numpy(zero_copy_only=False))[0] + 1
-               if n > 1 else np.empty(0, np.int64))
-        starts = np.concatenate(([0], brk, [n])).astype(np.int64) if n \
-            else np.zeros(1, np.int64)
-        return cls(arr.take(pa.array(starts[:-1])).to_numpy(
-            zero_copy_only=False), starts)
+        return cls(uterms, np.concatenate(
+            ([0], runs.run_ends.to_numpy())).astype(np.int64))
 
     @property
     def nbytes(self) -> int:
@@ -296,44 +299,12 @@ class _Terms(NamedTuple):
         return self.uterms[np.searchsorted(self.starts, pos, "right") - 1]
 
 
-class _Bin(NamedTuple):
-    """A binary column resident as one byte string and row offsets —
-    no per-row Python object until a query takes the row."""
-    offs: np.ndarray
-    data: bytes
-    valid: np.ndarray | None
+def _take(arr, pos: np.ndarray) -> np.ndarray:
+    """Rows ``pos`` of a resident binary column (a pyarrow array) as
+    an object array of bytes (None = null)."""
+    import pyarrow as pa
 
-    @classmethod
-    def of(cls, arr) -> "_Bin":
-        import pyarrow as pa
-
-        bufs = arr.buffers()
-        odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-        offs = np.frombuffer(bufs[1], dtype=odt)[
-            arr.offset: arr.offset + len(arr) + 1].astype(np.int64)
-        data = bufs[2].to_pybytes() if bufs[2] is not None else b""
-        valid = (arr.is_valid().to_numpy(zero_copy_only=False)
-                 if arr.null_count else None)
-        return cls(offs, data, valid)
-
-    @classmethod
-    def null(cls, n: int) -> "_Bin":
-        return cls(np.zeros(n + 1, np.int64), b"", np.zeros(n, bool))
-
-    @property
-    def nbytes(self) -> int:
-        return (self.offs.nbytes + len(self.data)
-                + (0 if self.valid is None else self.valid.nbytes))
-
-    def take(self, idx: np.ndarray) -> np.ndarray:
-        """Rows ``idx`` as an object array of bytes (None = null)."""
-        d = self.data
-        out = np.empty(idx.size, dtype=object)
-        out[:] = [d[a:b] for a, b in zip(self.offs[idx].tolist(),
-                                         self.offs[idx + 1].tolist())]
-        if self.valid is not None:
-            out[~self.valid[idx]] = None
-        return out
+    return arr.take(pa.array(pos)).to_numpy(zero_copy_only=False)
 
 
 class _Resident:
@@ -343,32 +314,54 @@ class _Resident:
     resident term index instead of a dataset scan.  Keys are (file
     identity, row group, column), so row groups load only when a query
     touches them (the min/max statistics pick them) and only the
-    columns the query reads; footers are cached the same way.  Columns
-    stay compact: integers as numpy arrays, binaries as :class:`_Bin`,
-    ``term`` as its :class:`_Terms` run index.  Bytes are bounded by
+    columns the query reads; footers and values derived from whole
+    files (:meth:`derived`) are cached the same way.  Integers stay
+    numpy arrays, binaries pyarrow arrays, ``term`` its
+    :class:`_Terms` run index.  Bytes are bounded by
     :data:`_RESIDENT_BUDGET`: every access evicts least-recently-used
-    entries until the total fits.  A hit or miss is counted per
-    row-group read (a miss loads at least one column)."""
+    entries until the total fits.  A whole-file scan reads through
+    without admitting or promoting, so it never evicts the queries'
+    working set.  A hit or miss is counted per row-group read (a miss
+    loads at least one column)."""
 
     def __init__(self):
         self._d: OrderedDict = OrderedDict()
         self._lock = threading.Lock()
+        self._pool = None
         self.bytes = 0
         self.hits = 0
         self.misses = 0
 
-    def _after_fork(self) -> None:
-        # a fork can copy the lock held by another thread of the
-        # parent: the child starts with a fresh one
-        self._lock = threading.Lock()
-        self.bytes = sum(nb for _, nb in self._d.values())
+    # a fork waits for the lock, so no child copies a half-changed map
+    def _before_fork(self) -> None:
+        self._lock.acquire()
 
-    def _get(self, key):
+    def _after_fork_parent(self) -> None:
+        self._lock.release()
+
+    def _after_fork_child(self) -> None:
+        self._lock = threading.Lock()
+        self._pool = None  # its threads stayed in the parent
+
+    def pool(self):
+        """The threads a query's row-group misses decode on, side by
+        side (parquet decode releases the GIL)."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        with self._lock:
+            if self._pool is None:
+                self._pool = ThreadPoolExecutor(
+                    max_workers=min(4, os.cpu_count() or 1),
+                    thread_name_prefix="resident")
+            return self._pool
+
+    def _get(self, key, promote: bool = True):
         e = self._d.get(key)
-        if e is not None:
+        if e is None:
+            return None
+        if promote:
             self._d.move_to_end(key)
-            return e[0]
-        return None
+        return e[0]
 
     def _put(self, key, val, nbytes: int) -> None:
         if key not in self._d:
@@ -387,6 +380,18 @@ class _Resident:
         if (st.st_size, st.st_mtime_ns) != (f.size, f.mtime_ns):
             raise FileNotFoundError(
                 f"{f.path} changed since the handle opened it; refresh()")
+
+    def derived(self, key: tuple, build):
+        """The value ``build()`` -> (value, nbytes) computes from
+        resident files, cached under ``key`` — which names the file
+        identities it came from, so a new generation misses."""
+        with self._lock:
+            v = self._get(key)
+        if v is None:
+            v, nb = build()
+            with self._lock:
+                self._put(key, v, nb)
+        return v
 
     def meta(self, f: _FileId) -> _Meta:
         with self._lock:
@@ -412,20 +417,32 @@ class _Resident:
             self._put((f, None), m, 1024 + 256 * len(nrows))
         return m
 
-    def chunk(self, f: _FileId, m: _Meta, rg: int, cols: tuple) -> dict:
-        """The row group's ``cols``, decoded (a column the file lacks —
-        a pre-bitset ``id_bits`` — as an all-null :class:`_Bin`)."""
+    def lookup(self, f: _FileId, rg: int, cols: tuple,
+               promote: bool = True) -> dict | None:
+        """The row group's ``cols`` when all are resident (a hit),
+        else None."""
         with self._lock:
-            got = {}
-            for c in cols:
-                v = self._get((f, rg, c))
-                if v is not None:
-                    got[c] = v
-            if len(got) == len(cols):
-                self.hits += 1
-                self._trim()
-                return got
+            got = {c: self._get((f, rg, c), promote) for c in cols}
+            if any(v is None for v in got.values()):
+                return None
+            self.hits += 1
+            self._trim()
+            return got
+
+    def chunk(self, f: _FileId, m: _Meta, rg: int, cols: tuple,
+              scan: bool = False) -> dict:
+        """The row group's ``cols``, decoded (a column the file lacks —
+        a pre-bitset ``id_bits`` — as all nulls).  A ``scan`` read
+        neither promotes what is resident nor admits what it loads."""
+        import pyarrow as pa
+
+        got = self.lookup(f, rg, cols, promote=not scan)
+        if got is not None:
+            return got
+        with self._lock:
             self.misses += 1
+            got = {c: v for c in cols
+                   if (v := self._get((f, rg, c), not scan)) is not None}
         missing = [c for c in cols if c not in got]
         self._same_file(f)
         tbl = pq.ParquetFile(f.path, metadata=m.md).read_row_group(
@@ -433,37 +450,42 @@ class _Resident:
         new = {}
         for c in missing:
             if c not in m.names:
-                v = _Bin.null(m.nrows[rg])
+                v = pa.nulls(m.nrows[rg], pa.binary())
             elif c == "term":
                 v = _Terms.of(tbl.column(c).combine_chunks(), f.path)
             elif c in _INT_COLS:
                 v = tbl.column(c).to_numpy()
             else:
-                v = _Bin.of(tbl.column(c).combine_chunks())
+                v = tbl.column(c).combine_chunks()
             new[c] = v
-        with self._lock:
-            for c, v in new.items():
-                self._put((f, rg, c), v, v.nbytes)
+        if not scan:
+            with self._lock:
+                for c, v in new.items():
+                    self._put((f, rg, c), v, v.nbytes)
         got.update(new)
         return got
 
 
 #: the one resident cache of this process
 _RESIDENT = _Resident()
-os.register_at_fork(after_in_child=_RESIDENT._after_fork)
+os.register_at_fork(before=_RESIDENT._before_fork,
+                    after_in_parent=_RESIDENT._after_fork_parent,
+                    after_in_child=_RESIDENT._after_fork_child)
 
 
 def _resident_chunks(files: list[_FileId], cols: tuple, lo=None, hi=None,
                      side: str = "right"):
     """Yield every needed row group of term-sorted parquet ``files``
     through the resident cache, in file order, as its decoded column
-    dict: all of them when ``lo`` is None, else those whose term
-    min/max statistics meet one of the sorted, disjoint ranges
+    dict: all of them (a scan) when ``lo`` is None, else those whose
+    term min/max statistics meet one of the sorted, disjoint ranges
     [lo[i], hi[i]] (``side`` = "right") or [lo[i], hi[i]) ("left").
     The deadline armed in this context is checked per row group."""
+    scan = lo is None
+    picks = []
     for f in files:
         m = _RESIDENT.meta(f)
-        if lo is None:
+        if scan:
             rgs = range(len(m.nrows))
         else:
             # row group [min, max] meets range i iff lo_i <= max and
@@ -473,9 +495,26 @@ def _resident_chunks(files: list[_FileId], cols: tuple, lo=None, hi=None,
             n_hi = np.searchsorted(hi, m.mins,
                                    "left" if side == "right" else "right")
             rgs = np.nonzero((n_lo > n_hi) | m.nostats)[0]
-        for rg in rgs:
-            _check_deadline(0)
-            yield _RESIDENT.chunk(f, m, int(rg), cols)
+        picks += [(f, m, int(rg)) for rg in rgs]
+    # a query takes its resident row groups first (a load may evict
+    # them), then loads the missing ones together, as one filtered
+    # dataset read would; a scan loads one at a time (bounded memory)
+    loaded, cold = {}, []
+    for f, m, rg in ([] if scan else picks):
+        ch = _RESIDENT.lookup(f, rg, cols)
+        if ch is None:
+            cold.append((f, m, rg))
+        else:
+            loaded[f, rg] = ch
+    if len(cold) > 1:
+        _check_deadline(0)
+        loaded.update(zip(((f, rg) for f, _, rg in cold),
+                          _RESIDENT.pool().map(
+                              lambda p: _RESIDENT.chunk(*p, cols), cold)))
+    for f, m, rg in picks:
+        _check_deadline(0)
+        ch = loaded.pop((f, rg), None)
+        yield ch if ch is not None else _RESIDENT.chunk(f, m, rg, cols, scan)
 
 
 def _resident_rows(files: list[_FileId], cols: tuple,
@@ -508,7 +547,8 @@ def _resident_rows(files: list[_FileId], cols: tuple,
         for c in cols:
             v = ch[c]
             parts[c].append(ti.rows(pos) if c == "term" else
-                            v.take(pos) if isinstance(v, _Bin) else v[pos])
+                            v[pos] if isinstance(v, np.ndarray) else
+                            _take(v, pos))
     out = {c: (np.concatenate(p) if p else np.empty(
         0, np.int64 if c in _INT_COLS else object)) for c, p in parts.items()}
     if lo is None:
@@ -750,7 +790,10 @@ class LocalSearcher:
     are a binary-search slice and a df lookup is one more.  Only the
     row groups queries touch load (their term min/max statistics pick
     them), bounded by :data:`_RESIDENT_BUDGET` bytes per process with
-    least-recently-used eviction.  Cache keys are the files'
+    least-recently-used eviction; whole-file reads (the expansion
+    catalog, the significant-terms histogram) read through without
+    evicting the queries' row groups, and the catalog frame they
+    build is kept once per generation.  Cache keys are the files'
     identities at open (path, size, mtime): :meth:`refresh` opens a
     new generation whose changed files miss.  Each read first stats
     the copy's ``stats.json``, so a copy deleted mid-session raises
@@ -955,20 +998,28 @@ class LocalSearcher:
 
     # ---------------------------------------------------------- plumbing
 
-    def _read(self, files: list[_FileId], cols: tuple, lo=None, hi=None,
-              side: str = "right"):
-        """:func:`_resident_rows` over this handle's files, after one
-        stat of the copy: a deleted copy raises FileNotFoundError here
-        even when every row it needs is resident."""
+    def _read(self, files: list[_FileId], cols: tuple,
+              terms: list[str] | None = None, prefix: str | None = None
+              ) -> tuple[np.ndarray | None, dict[str, np.ndarray]]:
+        """(codes, {col: array}) of the rows of ``files``, in file
+        order, through the resident cache (:func:`_resident_rows`):
+        the rows whose term is one of ``terms`` (any order, repeats
+        allowed; ``codes`` is each row's index in ``terms``), else the
+        rows whose term starts with ``prefix``, else every row (a
+        scan; ``codes`` None).  One stat of the copy comes first: a
+        deleted copy raises FileNotFoundError here even when every row
+        it needs is resident."""
         os.stat(self._stats_path)
-        return _resident_rows(files, cols, lo, hi, side)
-
-    def _rows(self, files: list[_FileId], terms: list[str],
-              cols: tuple) -> tuple[np.ndarray, dict[str, np.ndarray]]:
-        """(term index, {col: array}) of the rows of ``files`` whose
-        term is in the sorted, unique ``terms``, in file order."""
-        q = np.asarray(terms, dtype=object)
-        return self._read(files, cols, q, q)
+        if terms is not None:
+            q, first = np.unique(np.asarray(terms, dtype=object),
+                                 return_index=True)
+            codes, rows = _resident_rows(files, cols, q, q)
+            return first[codes], rows
+        if prefix is not None:
+            return _resident_rows(
+                files, cols, np.array([prefix], dtype=object),
+                np.array([prefix + "\uffff"], dtype=object), side="left")
+        return _resident_rows(files, cols)
 
     def _blocks(self, terms: list[str],
                 cols: tuple = _BLOCK_COLS) -> dict[str, np.ndarray]:
@@ -978,8 +1029,8 @@ class LocalSearcher:
         like the Spark path's sortWithinPartitions, so the shared
         kernels see identical group boundaries."""
         terms = sorted(set(terms))
-        codes, rows = self._rows(self._pfiles, terms,
-                                 tuple(c for c in cols if c != "term"))
+        codes, rows = self._read(self._pfiles,
+                                 tuple(c for c in cols if c != "term"), terms)
         df = self._dfs(terms)[codes]
         live = np.nonzero(df > 0)[0]
         sel = live[np.lexsort((codes[live], rows["block_id"][live]))]
@@ -999,12 +1050,10 @@ class LocalSearcher:
         if local:
             files, col = ((self._pfiles, "n") if self._commits
                           else (self._tfiles, "df"))
-            codes, rows = self._rows(files, local, (col,))
-            got = np.bincount(codes, weights=rows[col],
-                              minlength=len(local)).astype(np.int64)
-            pos = np.searchsorted(np.asarray(terms, dtype=object),
-                                  np.asarray(local, dtype=object))
-            out[pos] = got
+            codes, rows = self._read(files, (col,), local)
+            out[[t not in ov for t in terms]] = np.bincount(
+                codes, weights=rows[col], minlength=len(local)
+            ).astype(np.int64)
         return out
 
     def _mask_tomb(self, ids: np.ndarray,
@@ -1168,8 +1217,8 @@ class LocalSearcher:
         when any row lacks a bitset (a layout or commit written
         before the ``id_bits`` column), so the caller decodes
         instead, same answer."""
-        codes, rows = self._rows(self._pfiles, terms,
-                                 ("block_id", "id_bits"))
+        codes, rows = self._read(self._pfiles, ("block_id", "id_bits"),
+                                 terms)
         if pd.isna(rows["id_bits"]).any():
             return None
         return pd.DataFrame({"term": codes, **rows})
@@ -1727,7 +1776,7 @@ class LocalSearcher:
         for ch in _resident_chunks(self._pfiles,
                                    ("term", "block_id", "id_bits")):
             ti, bids, col = ch["term"], ch["block_id"], ch["id_bits"]
-            if col.valid is not None and not col.valid.all():
+            if col.null_count:
                 return None
             keep = bids < mblk.size
             keep[keep] = mblk[bids[keep]]
@@ -1735,8 +1784,13 @@ class LocalSearcher:
             if not rows.size:
                 continue
             bids_k = bids[rows].astype(np.int64)
-            starts = col.offs[rows]
-            lens = col.offs[rows + 1] - starts
+            # flat view of the binary column: offsets + data buffers
+            odt = (np.int64 if pa.types.is_large_binary(col.type)
+                   else np.int32)
+            offs = np.frombuffer(col.buffers()[1], dtype=odt)[
+                col.offset: col.offset + len(col) + 1].astype(np.int64)
+            starts = offs[rows]
+            lens = offs[rows + 1] - starts
             total = int(lens.sum())
             per_row = np.zeros(rows.size, dtype=np.int32)
             if total:
@@ -1744,7 +1798,7 @@ class LocalSearcher:
                 # the row's data (or block base) minus its place in
                 # the output stream
                 out_start = np.cumsum(lens) - lens
-                data = np.frombuffer(col.data, dtype=np.uint8)
+                data = np.frombuffer(col.buffers()[2], dtype=np.uint8)
                 ar = np.arange(total, dtype=np.int64)
                 masked = (data[ar + np.repeat(starts - out_start, lens)]
                           & full[ar + np.repeat(bids_k * nbytes - out_start,
@@ -2062,23 +2116,31 @@ class LocalSearcher:
         """(term, df) catalog — the multi-term expansion dictionary
         (FuzzyQuery/Wildcard rewrite runs here, one row per distinct
         term, never over postings) — or, with ``prefix``, its slice
-        [prefix, prefix + U+FFFF), from resident row groups.  On a
-        commit-pinned handle it is recomputed from the PINNED
+        [prefix, prefix + U+FFFF), read from the catalog row groups it
+        meets.  The whole catalog is built once per generation and
+        kept in the resident cache, keyed by the files it came from.
+        On a commit-pinned handle it is recomputed from the PINNED
         postings' per-block doc counts: the global terms parquet
         spans ALL commits, so its dfs would silently leak
         post-snapshot state into expansion scoring."""
         files, col = ((self._pfiles, "n") if self._commits
                       else (self._tfiles, "df"))
-        if prefix is None:
-            _, rows = self._read(files, ("term", col))
-        else:
-            _, rows = self._read(
-                files, ("term", col), np.array([prefix], dtype=object),
-                np.array([prefix + "\uffff"], dtype=object), side="left")
-        cat = pd.DataFrame({"term": rows["term"], "df": rows[col]})
-        if self._commits:
-            cat = cat.groupby("term", as_index=False)["df"].sum()
-        return cat
+
+        def frame(rows: dict) -> pd.DataFrame:
+            cat = pd.DataFrame({"term": rows["term"], "df": rows[col]})
+            if self._commits:
+                cat = cat.groupby("term", as_index=False)["df"].sum()
+            return cat
+
+        if prefix is not None:
+            return frame(self._read(files, ("term", col), prefix=prefix)[1])
+
+        def whole():
+            cat = frame(self._read(files, ("term", col))[1])
+            return cat, int(cat.memory_usage(deep=True).sum())
+
+        os.stat(self._stats_path)
+        return _RESIDENT.derived(("catalog", *files), whole)
 
     def scored_set(self, qterms: list[str], mode: str = "or",
                    min_match: int | None = None) -> Res:

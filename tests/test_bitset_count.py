@@ -249,6 +249,48 @@ def test_serve_count_raw_bitset_equals_scored(index_dir):
         assert s.count_raw(terms, mode) == want, (terms, mode)
 
 
+def test_serve_reads_any_term_order_over_many_row_groups(
+        spark, corpus, tmp_path):
+    """Postings and catalog files of many small row groups (rewritten
+    with a tiny row-group size): the node picks row groups by their
+    term min/max statistics, and terms given in any order, repeats
+    included, still find every row — count_raw, the matched ids, the
+    dfs, top-k and a prefix suggest equal the one-row-group index."""
+    import shutil
+
+    from katta_spark.index import build_index
+    from katta_spark.index.serve import LocalSearcher
+
+    d = str(tmp_path / "idx")
+    build_index(spark, corpus.limit(300), d, n_groups=1, block_range=64)
+    many = str(tmp_path / "many")
+    shutil.copytree(d, many)
+    for sub in ("postings", "terms"):
+        for f in Path(many, sub).rglob("*.parquet"):
+            pq.write_table(pq.read_table(f), f, row_group_size=4)
+        for crc in Path(many, sub).rglob(".*.crc"):
+            crc.unlink()  # stale Hadoop checksum sidecars of the rewrite
+    assert max(pq.ParquetFile(f).metadata.num_row_groups
+               for f in Path(many, "postings").rglob("*.parquet")) > 4
+    one, s = LocalSearcher(d, qcache_size=0), LocalSearcher(many,
+                                                            qcache_size=0)
+    for terms, mode in [(["scan", "merge"], "and"),
+                        (["scan", "merge"], "or"),
+                        (["return", "import", "return"], "or"),
+                        (["return", "import", "return"], "and")]:
+        want = one.count_raw(sorted(terms), mode)
+        assert want > 0 or mode == "and", (terms, mode)
+        assert s.count_raw(terms, mode) == want, (terms, mode)
+        assert one.count_raw(terms, mode) == want, (terms, mode)
+        assert np.array_equal(s._matched_ids(terms, mode),
+                              one._matched_ids(terms, mode))
+        assert s.topk(terms, k=10, mode=mode) == one.topk(terms, k=10,
+                                                            mode=mode)
+    vocab = ["zeta", "scan", "import", "merge", "return", "absent"]
+    assert s._dfs(sorted(vocab)).tolist() == one._dfs(sorted(vocab)).tolist()
+    assert s.suggest("re") == one.suggest("re")
+
+
 def test_serve_count_prebitset_layout_falls_back(spark, corpus, tmp_path):
     """An index whose parquet predates the id_bits column (simulated
     by rewriting its files without it) still counts correctly — the

@@ -299,14 +299,6 @@ class _Terms(NamedTuple):
         return self.uterms[np.searchsorted(self.starts, pos, "right") - 1]
 
 
-def _take(arr, pos: np.ndarray) -> np.ndarray:
-    """Rows ``pos`` of a resident binary column (a pyarrow array) as
-    an object array of bytes (None = null)."""
-    import pyarrow as pa
-
-    return arr.take(pa.array(pos)).to_numpy(zero_copy_only=False)
-
-
 class _Resident:
     """Process-wide LRU of decoded parquet column chunks — the node's
     open IndexSearcher (a Katta node keeps one per shard,
@@ -528,6 +520,8 @@ def _resident_rows(files: list[_FileId], cols: tuple,
     pair per range in its term index.  Returns (codes, columns),
     ``codes`` the range index of each row (None when ``lo`` is
     None)."""
+    import pyarrow as pa
+
     codes, parts = [], {c: [] for c in cols}
     for ch in _resident_chunks(files, tuple(dict.fromkeys(("term", *cols))),
                                lo, hi, side):
@@ -548,7 +542,8 @@ def _resident_rows(files: list[_FileId], cols: tuple,
             v = ch[c]
             parts[c].append(ti.rows(pos) if c == "term" else
                             v[pos] if isinstance(v, np.ndarray) else
-                            _take(v, pos))
+                            v.take(pa.array(pos)).to_numpy(
+                                zero_copy_only=False))
     out = {c: (np.concatenate(p) if p else np.empty(
         0, np.int64 if c in _INT_COLS else object)) for c, p in parts.items()}
     if lo is None:

@@ -167,6 +167,170 @@ def bm25_idf(df: float, n_docs: float) -> float:
     return float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
 
 
+# ------------------------------------------------------------ BM25 scoring
+# The one BM25 scorer of both query tiers (serve.LocalSearcher on a
+# node, the mapInPandas kernels of search.PhysicalIndex on Spark).
+# Input is a dict of numpy columns, one entry per (term, block) posting
+# row — block_id, term, df (global), max_tf, min_dl and the varint
+# buffers doc_gaps / tfs / dls — ORDERED BY (block_id, term).  A doc
+# lives in exactly one block, so its contributions are consecutive
+# term-sorted rows, and the per-doc float64 sum taken in row order is
+# the same on every tier and at every parallelism.
+
+#: most doc-gap bytes one wave decodes at once.  Every posting takes at
+#: least one byte, so this bounds the postings (and the ~100 bytes of
+#: intermediate arrays each needs, ~25 MB) a decode holds whatever the
+#: block_range and the number of query terms, and the work between two
+#: deadline checks (a few ms) — the deadline is checked once per wave
+WAVE_BYTES = 1 << 18
+
+
+def _idfs(df: np.ndarray, n_docs: float) -> np.ndarray:
+    """:func:`bm25_idf` of every entry of ``df``, the same float64s."""
+    df = df.astype(np.float64)
+    return np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def _topk_merge(cur: tuple[np.ndarray, np.ndarray] | None,
+                doc_ids: np.ndarray, scores: np.ndarray,
+                k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Merge candidates into the running top-k (score desc, doc_id
+    asc) — vectorized replacement for a per-doc heap."""
+    if cur is not None:
+        doc_ids = np.concatenate([cur[0], doc_ids])
+        scores = np.concatenate([cur[1], scores])
+    order = np.lexsort((doc_ids, -scores))[:k]
+    return doc_ids[order], scores[order]
+
+
+def score_postings(rows: dict, idx: np.ndarray, n_docs: float,
+                   avgdl: float, k1: float, b: float, block_range: int
+                   ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """BM25 of every posting of the rows ``idx`` of ``rows``:
+    (doc_ids, scores, counts), postings in row order, ``counts`` the
+    postings of each row.  Each varint column decodes with ONE
+    :func:`decode_varint` over its joined bytes, doc ids come back
+    from a segmented cumsum of the gaps, and every score is the same
+    float64 expression as ``bm25_idf(df) * bm25_tfnorm(tf, dl)``."""
+    if not len(idx):
+        return (np.empty(0, np.int64), np.empty(0, np.float64),
+                np.empty(0, np.int64))
+    gaps = rows["doc_gaps"][idx]
+    buf = b"".join(gaps)
+    # values that end inside rows 0..i: a value ends on a byte < 128
+    upto = np.searchsorted(np.flatnonzero(np.frombuffer(buf, np.uint8) < 128),
+                           np.cumsum(np.fromiter(map(len, gaps), np.int64,
+                                                 len(gaps))))
+    counts = np.diff(upto, prepend=0)
+    csum = np.zeros(int(upto[-1]) + 1, dtype=np.int64)
+    np.cumsum(decode_varint(buf), out=csum[1:])
+    base = rows["block_id"][idx].astype(np.int64) * block_range
+    ids = csum[1:] - np.repeat(csum[upto - counts] - base, counts)
+    tf = decode_varint(b"".join(rows["tfs"][idx]))
+    dl = decode_varint(b"".join(rows["dls"][idx]))
+    scores = (np.repeat(_idfs(rows["df"][idx], n_docs), counts)
+              * bm25_tfnorm(tf, dl, avgdl, k1, b))
+    return ids, scores, counts
+
+
+def score_blocks(rows: dict, n_docs: float, avgdl: float, k1: float,
+                 b: float, block_range: int, k: int | None = None,
+                 n_terms: int = 1, mode: str = "or",
+                 min_match: int | None = None,
+                 tomb: np.ndarray | None = None,
+                 after: tuple[float, int] | None = None, check=None):
+    """BM25 over (block_id, term)-ordered posting ``rows`` (see the
+    section comment).  Without ``k``: every matching doc as sorted
+    (doc_ids, scores, nt), ``nt`` the rows that hit each doc.  With
+    ``k``: block-max WAND top-k (doc_ids, scores), score desc / doc_id
+    asc.
+
+    A doc must hit ``required`` distinct terms — ``n_terms`` for
+    ``mode`` "and", else ``min_match`` (Solr mm, default 1).  With
+    ``k``, doc-range groups (rows of one block_id) with fewer distinct
+    terms drop out unread, and the rest are visited in WAVES in
+    descending order of their bound, the row sum of
+    idf * tfnorm(max_tf, min_dl): 4 groups, then twice as many each
+    wave, each wave at most :data:`WAVE_BYTES`.  After a wave every
+    group whose bound is strictly below the running k-th score is
+    skipped — and since bounds descend, the scan stops there.  Which
+    groups a wave holds never changes the answer, only how much is
+    decoded: a skipped doc scores below k kept ones.
+
+    The keep-mask applied to each wave's (doc_ids, scores) before the
+    merge drops docs under ``required``, tombstoned docs (``tomb``,
+    sorted doc ids) and docs not strictly after the ``after`` cursor
+    (score, doc_id), so the k-th score that prunes is always a live
+    page's and pruning stays sound under deletes and cursors.
+    ``check`` (no arguments) runs before each wave — the node tier's
+    deadline."""
+    required = n_terms if mode == "and" else max(1, int(min_match or 1))
+    bid = rows["block_id"]
+    n = len(bid)
+    if not n:
+        if k is not None:
+            return np.empty(0, np.int64), np.empty(0, np.float64)
+        return (np.empty(0, np.int64), np.empty(0, np.float64),
+                np.empty(0, np.int64))
+    first_row = np.ones(n, dtype=bool)
+    first_row[1:] = bid[1:] != bid[:-1]
+    starts = np.flatnonzero(first_row)
+    sizes = np.diff(starts, append=n)
+    gbytes = np.add.reduceat(
+        np.fromiter(map(len, rows["doc_gaps"]), np.int64, n), starts)
+    if k is None:
+        order, wave_n = np.arange(starts.size), starts.size
+    else:
+        new_term = first_row.copy()
+        new_term[1:] |= rows["term"][1:] != rows["term"][:-1]
+        live = np.flatnonzero(
+            np.add.reduceat(new_term.astype(np.int64), starts) >= required)
+        ub = np.add.reduceat(
+            _idfs(rows["df"], n_docs)
+            * bm25_tfnorm(rows["max_tf"], rows["min_dl"], avgdl, k1, b),
+            starts)
+        order, wave_n = live[np.argsort(-ub[live], kind="stable")], 4
+    top, parts, threshold, pos = None, [], -np.inf, 0
+    while pos < order.size:
+        if check is not None:
+            check()
+        wave = order[pos:pos + wave_n]
+        if k is not None:
+            wave = wave[ub[wave] >= threshold]  # bounds descend: a prefix
+        wave = wave[:max(1, int(np.searchsorted(np.cumsum(gbytes[wave]),
+                                                WAVE_BYTES, "right")))]
+        if not wave.size:
+            break
+        pos += wave.size
+        wave_n *= 2
+        wave = np.sort(wave)
+        cnt = sizes[wave]
+        idx = (np.repeat(starts[wave] - np.cumsum(cnt) + cnt, cnt)
+               + np.arange(int(cnt.sum())))
+        ids, scores, _ = score_postings(rows, idx, n_docs, avgdl, k1, b,
+                                        block_range)
+        uniq, inv = np.unique(ids, return_inverse=True)
+        summed = np.zeros(uniq.size, dtype=np.float64)
+        np.add.at(summed, inv, scores)
+        nt = np.bincount(inv, minlength=uniq.size)
+        keep = nt >= required
+        if tomb is not None and tomb.size:
+            keep &= ~np.isin(uniq, tomb)
+        if after is not None:
+            s0, d0 = after
+            keep &= (summed < s0) | ((summed == s0) & (uniq > d0))
+        if k is None:
+            parts.append((uniq[keep], summed[keep], nt[keep]))
+            continue
+        top = _topk_merge(top, uniq[keep], summed[keep], k)
+        if k and top[0].size >= k:
+            threshold = top[1][-1]
+    if k is not None:
+        return top if top is not None else (np.empty(0, np.int64),
+                                            np.empty(0, np.float64))
+    return tuple(np.concatenate(c) for c in zip(*parts))
+
+
 # ------------------------------------------------------------- id bitsets
 # Per-(term, block) doc-id BITSET: bit i set <=> doc (block_base + i)
 # carries the term.  Little-endian bit order, truncated after the last

@@ -11,8 +11,8 @@ raw shuffle speed regardless of index size.  NOTE: duplicate
 (term, block_id) rows CAN exist across commits — when a commit's doc
 count is not a multiple of block_range, the next commit's first docs
 share the boundary block_id.  Readers must tolerate this (they do:
-_score_group sums across rows of a group and the WAND upper bound
-over-estimates, which is sound); compaction preserves the duplicate
+codec.score_blocks sums across rows of a group and the WAND upper
+bound over-estimates, which is sound); compaction preserves the duplicate
 rows rather than merging them.
 
 Docs and the term catalog are untouched (the catalog is already a

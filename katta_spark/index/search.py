@@ -17,10 +17,11 @@ SearchCall:1509-1552 + Hits.sortCollection Hits.java:201-210):
    doc range, so per-doc scores are computed EXACTLY within one task
    (global df/idf comes from the broadcast term catalog, restoring
    LuceneServer.java:76-82).
-3. per-partition block-max WAND kernel (Arrow-batched mapInPandas,
-   numpy inside): iterate doc-range groups in order, skip a group
-   when its upper bound sum(idf_t * tfnorm(max_tf_t, min_dl_t))
-   can't beat the current k-th score — Katta/Lucene's
+3. per-partition block-max WAND kernel (Arrow-batched mapInPandas
+   around codec.score_blocks, the scorer the node tier runs too):
+   visit doc-range groups in waves, highest upper bound
+   sum(idf_t * tfnorm(max_tf_t, min_dl_t)) first, and stop once the
+   bounds left can't beat the current k-th score — Katta/Lucene's
    TopScoreDocCollector with BMW pruning on top.
 4. driver-side TakeOrderedAndProject merge with the exact reference
    tie-break: score desc, doc_id asc (Hit.compareTo, Hit.java:126-139).
@@ -57,18 +58,6 @@ class SearchResponse:
     qtime_ms: int
 
 
-def _topk_merge(cur: tuple[np.ndarray, np.ndarray] | None,
-                doc_ids: np.ndarray, scores: np.ndarray,
-                k: int) -> tuple[np.ndarray, np.ndarray]:
-    """Merge block candidates into the running top-k (score desc,
-    doc_id asc) — vectorized replacement for a per-doc heap."""
-    if cur is not None:
-        doc_ids = np.concatenate([cur[0], doc_ids])
-        scores = np.concatenate([cur[1], scores])
-    order = np.lexsort((doc_ids, -scores))[:k]
-    return doc_ids[order], scores[order]
-
-
 def _iter_block_groups(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Yield rows grouped by block_id, preserving sorted partition
     order across Arrow batch boundaries."""
@@ -89,38 +78,25 @@ def _iter_block_groups(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
         yield pending
 
 
-def _score_group(g: pd.DataFrame, n_docs: float, avgdl: float,
-                 k1: float, b: float, block_range: int
-                 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Exact (doc_id, score, nt) for one doc-range group.  Terms are
-    processed in sorted order so each doc's float64 sum accumulates
-    in a deterministic order (rank-identity across parallelism).
-    idf comes from the broadcast-joined global df column (the restored
-    getDocFreqs() exchange, LuceneServer.java:76-82)."""
-    g = g.sort_values("term", kind="mergesort")
-    bid = int(g["block_id"].iloc[0])
-    all_ids, all_scores = [], []
-    for row in g.itertuples(index=False):
-        ids, tfs, dls = codec.decode_block(
-            row.doc_gaps, row.tfs, row.dls, bid, block_range
-        )
-        idf = codec.bm25_idf(float(row.df), n_docs)
-        all_ids.append(ids)
-        all_scores.append(idf * codec.bm25_tfnorm(tfs, dls, avgdl, k1, b))
-    ids = np.concatenate(all_ids)
-    scores = np.concatenate(all_scores)
-    uniq, inv = np.unique(ids, return_inverse=True)
-    summed = np.zeros(uniq.size, dtype=np.float64)
-    np.add.at(summed, inv, scores)
-    nt = np.bincount(inv, minlength=uniq.size)
-    return uniq, summed, nt.astype(np.int64)
+def _partition_rows(batches: Iterator[pd.DataFrame]) -> dict[str, np.ndarray]:
+    """One partition's posting rows as numpy columns, in their
+    (block_id, term) order — the input of :func:`codec.score_blocks`."""
+    frames = [p for p in batches if len(p)]
+    if not frames:
+        return {"block_id": np.empty(0, np.int64),
+                "term": np.empty(0, object)}
+    pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 \
+        else frames[0]
+    return {c: pdf[c].to_numpy() for c in pdf.columns}
 
 
 def make_wand_kernel(n_docs: float, avgdl: float, k1: float, b: float,
                      k: int, n_terms: int, mode: str, block_range: int,
                      min_match: int | None = None,
                      after: tuple[float, int] | None = None):
-    """Per-partition block-max WAND top-k kernel for mapInPandas.
+    """Per-partition block-max WAND top-k kernel for mapInPandas — a
+    wrapper of :func:`codec.score_blocks` (bound-ordered waves, skip
+    rule, keep-mask and merge are documented there).
 
     ``min_match`` (Solr dismax mm): a doc must match at least that
     many distinct query terms; "and" is the special case
@@ -136,52 +112,16 @@ def make_wand_kernel(n_docs: float, avgdl: float, k1: float, b: float,
     pruning — the skip threshold still comes from the page's own kth
     score, which is sound because pruned blocks cannot contribute any
     hit above it."""
-    required = n_terms if mode == "and" else max(1, int(min_match or 1))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        top: tuple[np.ndarray, np.ndarray] | None = None
-        threshold = -np.inf
-        for g in _iter_block_groups(batches):
-            terms_here = set(g["term"])
-            if required > 1 and len(terms_here) < required:
-                continue  # too few terms => no doc in this range matches
-            ub = float(
-                sum(
-                    codec.bm25_idf(float(df), n_docs)
-                    * codec.bm25_tfnorm(
-                        np.array([mt]), np.array([md]), avgdl, k1, b
-                    )[0]
-                    for df, mt, md in zip(g["df"], g["max_tf"], g["min_dl"])
-                )
-            )
-            if ub < threshold:
-                continue  # block-max skip: cannot enter the top-k
-            ids, scores, nt = _score_group(g, n_docs, avgdl, k1, b, block_range)
-            if required > 1:
-                keep = nt >= required
-                ids, scores = ids[keep], scores[keep]
-                if not ids.size:
-                    continue
-            if after is not None:
-                s0, d0 = after
-                keep = (scores < s0) | ((scores == s0) & (ids > d0))
-                ids, scores = ids[keep], scores[keep]
-                if not ids.size:
-                    continue
-            top = _topk_merge(top, ids, scores, k)
-            if top[0].size >= k:
-                threshold = float(top[1][-1])
-        if top is None:
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float64"),
-                 "nt": pd.Series(dtype="int32")}
-            )
-        else:
-            yield pd.DataFrame(
-                {"doc_id": top[0], "score": top[1],
-                 "nt": np.full(top[0].size, n_terms, dtype=np.int32)}
-            )
+        ids, scores = codec.score_blocks(
+            _partition_rows(batches), n_docs, avgdl, k1, b, block_range,
+            k=k, n_terms=n_terms, mode=mode, min_match=min_match,
+            after=after)
+        yield pd.DataFrame(
+            {"doc_id": ids, "score": scores,
+             "nt": np.full(ids.size, n_terms, dtype=np.int32)}
+        )
 
     return kernel
 
@@ -671,84 +611,27 @@ def make_multi_kernel(qmap: list[tuple[str, list[str], str]],
                       n_docs: float, avgdl: float, k1: float, b: float,
                       k: int, block_range: int):
     """Batched top-k kernel: MANY queries against ONE pruned postings
-    scan.  ``qmap`` = (qid, sorted unique terms, mode) per query.  Per
-    doc-range group every term decodes exactly once; each query then
-    aggregates its members' postings, with an independent block-max
-    WAND threshold per query (a group is skipped for a query whose
-    upper bound cannot beat its current k-th score).  The Spark
+    scan.  ``qmap`` = (qid, sorted unique terms, mode) per query; each
+    query runs :func:`codec.score_blocks` over its own terms' rows of
+    the partition, with its own block-max WAND threshold.  The Spark
     re-expression of Katta's client firing N concurrent searches: one
     job, one scan, one shuffle instead of N."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tops: dict[str, tuple | None] = {qid: None for qid, _, _ in qmap}
-        thr: dict[str, float] = {qid: -np.inf for qid, _, _ in qmap}
-        for g in _iter_block_groups(batches):
-            bid = int(g["block_id"].iloc[0])
-            # per-term block metadata (pre-decode): upper-bound parts
-            ubp: dict[str, float] = {}
-            for row in g.itertuples(index=False):
-                u = codec.bm25_idf(float(row.df), n_docs) * codec.bm25_tfnorm(
-                    np.array([row.max_tf]), np.array([row.min_dl]),
-                    avgdl, k1, b,
-                )[0]
-                ubp[row.term] = ubp.get(row.term, 0.0) + float(u)
-            # which queries need this group at all?
-            active: list[tuple[str, list[str], str]] = []
-            need: set[str] = set()
-            for qid, terms, mode in qmap:
-                present = [t for t in terms if t in ubp]
-                if not present:
-                    continue
-                if mode == "and" and len(present) < len(terms):
-                    continue
-                if sum(ubp[t] for t in present) < thr[qid]:
-                    continue  # per-query block-max skip
-                active.append((qid, terms, mode))
-                need.update(present)
-            if not active:
-                continue
-            decoded: dict[str, list[tuple[np.ndarray, np.ndarray]]] = {}
-            for row in g.itertuples(index=False):
-                if row.term not in need:
-                    continue  # no surviving query wants this term
-                ids, tfs, dls = codec.decode_block(
-                    row.doc_gaps, row.tfs, row.dls, bid, block_range
-                )
-                idf = codec.bm25_idf(float(row.df), n_docs)
-                decoded.setdefault(row.term, []).append(
-                    (ids, idf * codec.bm25_tfnorm(tfs, dls, avgdl, k1, b))
-                )
-            for qid, terms, mode in active:
-                runs = [r for t in terms for r in decoded.get(t, [])]
-                ids = np.concatenate([r[0] for r in runs])
-                scores = np.concatenate([r[1] for r in runs])
-                uniq, inv = np.unique(ids, return_inverse=True)
-                summed = np.zeros(uniq.size, dtype=np.float64)
-                np.add.at(summed, inv, scores)
-                if mode == "and":
-                    nt = np.bincount(inv, minlength=uniq.size)
-                    keep = nt == len(terms)
-                    uniq, summed = uniq[keep], summed[keep]
-                    if not uniq.size:
-                        continue
-                tops[qid] = _topk_merge(tops[qid], uniq, summed, k)
-                if tops[qid][0].size >= k:
-                    thr[qid] = float(tops[qid][1][-1])
+        rows = _partition_rows(batches)
         frames = []
-        for qid, top in tops.items():
-            if top is None:
-                continue
+        for qid, terms, mode in qmap:
+            sel = np.isin(rows["term"], terms)
+            ids, scores = codec.score_blocks(
+                {c: v[sel] for c, v in rows.items()}, n_docs, avgdl, k1, b,
+                block_range, k=k, n_terms=len(terms), mode=mode)
             frames.append(pd.DataFrame(
-                {"qid": qid, "doc_id": top[0], "score": top[1]}
-            ))
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
-        else:
-            yield pd.DataFrame(
-                {"qid": pd.Series(dtype="object"),
-                 "doc_id": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float64")}
-            )
+                {"qid": np.full(ids.size, qid, dtype=object),
+                 "doc_id": ids, "score": scores}))
+        yield pd.concat(frames, ignore_index=True) if frames else \
+            pd.DataFrame({"qid": np.empty(0, object),
+                          "doc_id": np.empty(0, np.int64),
+                          "score": np.empty(0, np.float64)})
 
     return kernel
 
@@ -757,34 +640,19 @@ def make_clause_kernel(n_docs: float, avgdl: float, k1: float, b: float,
                        block_range: int):
     """Per-partition kernel emitting PER-CLAUSE scores
     (doc_id, term, score) — one output row per posting, no per-doc
-    summation.  Feeds combiners whose algebra is not a plain sum
-    (DisjunctionMax: max + tie*(sum-max)); the combine itself runs as
-    a JVM hash aggregation on the kernel output."""
+    summation (:func:`codec.score_postings`).  Feeds combiners whose
+    algebra is not a plain sum (DisjunctionMax: max + tie*(sum-max));
+    the combine itself runs as a JVM hash aggregation on the kernel
+    output."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        empty = True
-        for g in _iter_block_groups(batches):
-            bid = int(g["block_id"].iloc[0])
-            for row in g.itertuples(index=False):
-                ids, tfs, dls = codec.decode_block(
-                    row.doc_gaps, row.tfs, row.dls, bid, block_range
-                )
-                idf = codec.bm25_idf(float(row.df), n_docs)
-                empty = False
-                yield pd.DataFrame(
-                    {
-                        "doc_id": ids,
-                        "term": np.full(ids.size, row.term, dtype=object),
-                        "score": idf
-                        * codec.bm25_tfnorm(tfs, dls, avgdl, k1, b),
-                    }
-                )
-        if empty:
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"),
-                 "term": pd.Series(dtype="object"),
-                 "score": pd.Series(dtype="float64")}
-            )
+        rows = _partition_rows(batches)
+        ids, scores, counts = codec.score_postings(
+            rows, np.arange(len(rows["block_id"])), n_docs, avgdl, k1, b,
+            block_range)
+        yield pd.DataFrame({"doc_id": ids,
+                            "term": np.repeat(rows["term"], counts),
+                            "score": scores})
 
     return kernel
 
@@ -921,19 +789,15 @@ def make_bool_kernel(terms: list[str], spec: tuple, n_docs: float,
 def make_exhaustive_kernel(n_docs: float, avgdl: float,
                            k1: float, b: float, block_range: int):
     """Decode-and-score-everything kernel: emits (doc_id, score, nt)
-    for every matching doc — feeds count/group/facet/sorted/filtered
-    paths where WAND's threshold pruning would be unsound."""
+    for every matching doc (:func:`codec.score_blocks` without k) —
+    feeds count/group/facet/sorted/filtered paths where WAND's
+    threshold pruning would be unsound."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for g in _iter_block_groups(batches):
-            ids, scores, nt = _score_group(g, n_docs, avgdl, k1, b, block_range)
-            yield pd.DataFrame(
-                {"doc_id": ids, "score": scores, "nt": nt.astype(np.int32)}
-            )
+        ids, scores, nt = codec.score_blocks(
+            _partition_rows(batches), n_docs, avgdl, k1, b, block_range)
         yield pd.DataFrame(
-            {"doc_id": pd.Series(dtype="int64"),
-             "score": pd.Series(dtype="float64"),
-             "nt": pd.Series(dtype="int32")}
+            {"doc_id": ids, "score": scores, "nt": nt.astype(np.int32)}
         )
 
     return kernel
@@ -1259,8 +1123,9 @@ class PhysicalIndex:
         the cursor path keeps every per-partition heap at k and
         filters vectorized inside the kernel, so page 1000 costs the
         same as page 1.  Scores are float64-deterministic across runs
-        and parallelism (sorted-term accumulation, _score_group), so a
-        cursor taken from one page slices the next exactly."""
+        and parallelism (row-order accumulation in
+        codec.score_blocks), so a cursor taken from one page slices
+        the next exactly."""
         terms = sorted(set(self._strip_stops(qterms)))
         if self.tombstones is not None:
             use_wand = False  # pruned heap could retain deleted docs

@@ -13,11 +13,10 @@ queries touch RESIDENT as decoded numpy columns (:class:`_Resident`:
 postings and catalog files are term-sorted at write, so parquet
 min/max stats pick a query term's row groups and a binary search
 slices its rows — the Lucene terms-index seek), and scores through
-numpy-native scans (:func:`_wand_scan` / :func:`_exhaustive_scan`)
-that mirror the Spark kernels' decode, accumulation order, skip
-rule, and tie-break exactly (rank-identity tested query-by-query;
-the positional phrase path still runs the shared
-:func:`make_phrase_kernel`) — at RPC-class latency: no job
+the same scoring function as the Spark kernels
+(:func:`codec.score_blocks`: one decode, accumulation order, skip
+rule and tie-break for both tiers; the positional phrase path runs
+the shared :func:`make_phrase_kernel`) — at RPC-class latency: no job
 scheduling, no shuffle, no executor round-trip, and no per-row
 pandas overhead in the hot loop.
 
@@ -47,6 +46,7 @@ import pandas as pd
 import pyarrow.dataset as pa_ds
 import pyarrow.parquet as pq
 
+from katta_spark.index import codec
 from katta_spark.index.search import (
     make_phrase_kernel,
     strip_stops,
@@ -499,12 +499,12 @@ def _resident_chunks(files: list[_FileId], cols: tuple, lo=None, hi=None,
         else:
             loaded[f, rg] = ch
     if len(cold) > 1:
-        _check_deadline(0)
+        _check_deadline()
         loaded.update(zip(((f, rg) for f, _, rg in cold),
                           _RESIDENT.pool().map(
                               lambda p: _RESIDENT.chunk(*p, cols), cold)))
     for f, m, rg in picks:
-        _check_deadline(0)
+        _check_deadline()
         ch = loaded.pop((f, rg), None)
         yield ch if ch is not None else _RESIDENT.chunk(f, m, rg, cols, scan)
 
@@ -556,19 +556,16 @@ class QueryTimeout(TimeoutError):
     TimeLimitingCollector contract the reference wraps every shard
     search in (LuceneServer.java:1555-1564): the collector aborts
     between doc collections rather than running to completion.
-    Here the numpy kernels check the deadline between posting-block
-    decodes (the same granularity: work already decoded is
-    abandoned, no partial ranking is returned — a shard result is
-    exact or absent).  Subclasses :class:`TimeoutError` so a budgeted
-    query under ``complete=True`` raises ONE exception type whether
-    the worker kernel aborts first (QueryTimeout) or the parent's
-    budget race wins (TimeoutError) — callers catch TimeoutError."""
+    Here the scorer checks the deadline before each decode wave
+    (:func:`codec.score_blocks`, at most ``codec.WAVE_BYTES`` of
+    postings apart) and reads check it per row group: work already
+    decoded is abandoned, no partial ranking is returned — a shard
+    result is exact or absent.  Subclasses :class:`TimeoutError` so a
+    budgeted query under ``complete=True`` raises ONE exception type
+    whether the worker kernel aborts first (QueryTimeout) or the
+    parent's budget race wins (TimeoutError) — callers catch
+    TimeoutError."""
 
-
-#: check the clock only every N block decodes — a monotonic read is
-#: ~40 ns but the decode loop is hot; N=32 bounds overshoot to a few
-#: hundred microseconds of block work
-_DEADLINE_STRIDE = 32
 
 #: kernel deadline (monotonic seconds) of the query running in THIS
 #: context — armed by _budget() for a timed LocalSearcher call and by
@@ -598,11 +595,10 @@ def _budget(timeout_ms: float | None):
         _DEADLINE.reset(tok)
 
 
-def _check_deadline(i: int) -> None:
-    if i % _DEADLINE_STRIDE == 0:
-        deadline = _DEADLINE.get()
-        if deadline is not None and time.monotonic() > deadline:
-            raise QueryTimeout("query deadline exceeded in kernel")
+def _check_deadline() -> None:
+    deadline = _DEADLINE.get()
+    if deadline is not None and time.monotonic() > deadline:
+        raise QueryTimeout("query deadline exceeded in kernel")
 
 
 def _is_infra_failure(exc: BaseException) -> bool:
@@ -628,106 +624,6 @@ def _deadline_task(args: tuple):
     fn, payload, budget_ms = args
     with _budget(budget_ms):
         return fn(payload)
-
-
-def _exhaustive_scan(blocks: dict[str, np.ndarray], n_docs: float,
-                     avgdl: float, k1: float, b: float, block_range: int
-                     ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(doc_id, score, nt) over every posting row — numpy-native
-    mirror of make_exhaustive_kernel.  Score accumulation order is
-    the row order of the (block_id, term)-sorted columns
-    (:meth:`LocalSearcher._blocks`), which is the per-doc sorted-term
-    order _score_group uses, so scores are IDENTICAL to the Spark
-    tier (a doc lives in exactly one block, its contributions are
-    term-sorted rows)."""
-    from katta_spark.index import codec
-
-    bids, dfs = blocks["block_id"], blocks["df"]
-    gaps, tfs, dls = blocks["doc_gaps"], blocks["tfs"], blocks["dls"]
-    if not len(bids):
-        return (np.empty(0, np.int64), np.empty(0, np.float64),
-                np.empty(0, np.int64))
-    all_ids, all_scores = [], []
-    for i in range(len(bids)):
-        _check_deadline(i)
-        ids, tf, dl = codec.decode_block(
-            gaps[i], tfs[i], dls[i], int(bids[i]), block_range
-        )
-        idf = codec.bm25_idf(float(dfs[i]), n_docs)
-        all_ids.append(ids)
-        all_scores.append(idf * codec.bm25_tfnorm(tf, dl, avgdl, k1, b))
-    ids = np.concatenate(all_ids)
-    scores = np.concatenate(all_scores)
-    uniq, inv = np.unique(ids, return_inverse=True)
-    summed = np.zeros(uniq.size, dtype=np.float64)
-    np.add.at(summed, inv, scores)
-    nt = np.bincount(inv, minlength=uniq.size).astype(np.int64)
-    return uniq, summed, nt
-
-
-def _wand_scan(blocks: dict[str, np.ndarray], n_docs: float, avgdl: float,
-               k1: float, b: float, block_range: int, k: int,
-               n_terms: int, mode: str, min_match: int | None = None
-               ) -> tuple[np.ndarray, np.ndarray]:
-    """Block-max WAND top-k — numpy-native mirror of
-    make_wand_kernel: per-row upper bounds are computed VECTORIZED
-    up front, group iteration touches only integer boundaries, and a
-    doc-range group decodes only when its bound can beat the running
-    k-th score.  Same skip rule, same merge, same tie-break — so the
-    result set is identical to both the Spark WAND kernel and the
-    exhaustive scan (tested)."""
-    from katta_spark.index import codec
-    from katta_spark.index.search import _topk_merge
-
-    required = n_terms if mode == "and" else max(1, int(min_match or 1))
-    terms, bids = blocks["term"], blocks["block_id"]
-    gaps, tfs, dls = blocks["doc_gaps"], blocks["tfs"], blocks["dls"]
-    if not len(bids):
-        return np.empty(0, np.int64), np.empty(0, np.float64)
-    mt = blocks["max_tf"].astype(np.float64)
-    md = blocks["min_dl"].astype(np.float64)
-    dfv = blocks["df"].astype(np.float64)
-    idf_v = np.log(1.0 + (n_docs - dfv + 0.5) / (dfv + 0.5))
-    ub_v = idf_v * (mt * (k1 + 1.0)
-                    / (mt + k1 * (1.0 - b + b * md / avgdl)))
-    bounds = np.nonzero(bids[1:] != bids[:-1])[0] + 1
-    starts = np.concatenate(([0], bounds))
-    ends = np.concatenate((bounds, [len(bids)]))
-    top: tuple[np.ndarray, np.ndarray] | None = None
-    threshold = -np.inf
-    for gi, (s, e) in enumerate(zip(starts, ends)):
-        _check_deadline(gi)
-        if required > 1 and len(set(terms[s:e])) < required:
-            continue
-        if float(ub_v[s:e].sum()) < threshold:
-            continue
-        g_ids, g_scores = [], []
-        bid = int(bids[s])
-        for i in range(s, e):
-            ids, tf, dl = codec.decode_block(
-                gaps[i], tfs[i], dls[i], bid, block_range
-            )
-            g_ids.append(ids)
-            g_scores.append(
-                float(idf_v[i]) * codec.bm25_tfnorm(tf, dl, avgdl, k1, b)
-            )
-        ids = np.concatenate(g_ids)
-        scores = np.concatenate(g_scores)
-        uniq, inv = np.unique(ids, return_inverse=True)
-        summed = np.zeros(uniq.size, dtype=np.float64)
-        np.add.at(summed, inv, scores)
-        if required > 1:
-            nt = np.bincount(inv, minlength=uniq.size)
-            keep = nt >= required
-            uniq, summed = uniq[keep], summed[keep]
-            if not uniq.size:
-                continue
-        top = _topk_merge(top, uniq, summed, k)
-        if top[0].size >= k:
-            threshold = float(top[1][-1])
-    if top is None:
-        return np.empty(0, np.int64), np.empty(0, np.float64)
-    return top
 
 
 class _ResultCache:
@@ -809,8 +705,8 @@ class LocalSearcher:
     def _deadline(self) -> float | None:
         """The kernel deadline armed in the calling context (None when
         the running query has no budget) — every scoring path funnels
-        through _scored / _wand_scan, which check it between block
-        decodes (TimeLimitingCollector parity)."""
+        through _scored, whose scorer checks it before each decode
+        wave (TimeLimitingCollector parity)."""
         return _DEADLINE.get()
 
     def _checked_table(self, ds, columns=None, filter=None):
@@ -833,7 +729,7 @@ class LocalSearcher:
                              batch_size=16384)
         batches = []
         for b in scanner.to_batches():
-            _check_deadline(0)
+            _check_deadline()
             batches.append(b)
         return pa.Table.from_batches(
             batches, schema=scanner.projected_schema
@@ -936,10 +832,13 @@ class LocalSearcher:
         handles."""
         c = self._qcache
         total = (c.hits + c.misses) if c else 0
+        # under the lock: a load raises the byte count before it trims
+        with _RESIDENT._lock:
+            res = (_RESIDENT.bytes, _RESIDENT.hits, _RESIDENT.misses)
         return {
-            "resident_bytes": _RESIDENT.bytes,
-            "rowgroup_hits": _RESIDENT.hits,
-            "rowgroup_misses": _RESIDENT.misses,
+            "resident_bytes": res[0],
+            "rowgroup_hits": res[1],
+            "rowgroup_misses": res[2],
             "index_dir": self.index_dir,
             "n_docs": int(self.stats["n_docs"]),
             "commits": list(self.stats.get("commits") or []),
@@ -1021,8 +920,8 @@ class LocalSearcher:
         """Posting rows of the query terms + their df as numpy columns
         (``term`` is the index into the sorted, unique term list, and
         a term without a df drops out) ordered (block_id, term) exactly
-        like the Spark path's sortWithinPartitions, so the shared
-        kernels see identical group boundaries."""
+        like the Spark path's sortWithinPartitions — the row order
+        :func:`codec.score_blocks` sums in."""
         terms = sorted(set(terms))
         codes, rows = self._read(self._pfiles,
                                  tuple(c for c in cols if c != "term"), terms)
@@ -1058,17 +957,17 @@ class LocalSearcher:
         keep = ~np.isin(ids, self._tomb)
         return (ids[keep], *(o[keep] for o in others))
 
-    def _scored(self, terms: list[str]) -> tuple[np.ndarray, np.ndarray,
-                                                 np.ndarray]:
-        """(doc_id, score, nt) for every matching live doc — the
-        exhaustive path (numpy scan, score-identical to the Spark
-        kernel)."""
-        ids, scores, nt = _exhaustive_scan(
-            self._blocks(terms), float(self.stats["n_docs"]),
-            self.stats["avgdl"], self.stats["k1"], self.stats["b"],
-            self.stats["block_range"],
-        )
-        return self._mask_tomb(ids, scores, nt)
+    def _scored(self, terms: list[str], **top):
+        """(doc_id, score, nt) for every matching live doc, sorted by
+        doc_id — or, given ``top`` (k, n_terms, mode, min_match), the
+        WAND top-k (doc_id, score): :func:`codec.score_blocks` over the
+        sorted, unique ``terms``' posting rows with this handle's
+        stats, tombstones and the context's deadline."""
+        s = self.stats
+        return codec.score_blocks(
+            self._blocks(terms), float(s["n_docs"]), s["avgdl"], s["k1"],
+            s["b"], s["block_range"], tomb=self._tomb,
+            check=_check_deadline, **top)
 
     # ------------------------------------------------------------ queries
 
@@ -1077,32 +976,20 @@ class LocalSearcher:
              timeout_ms: float | None = None
              ) -> list[tuple[int, float]]:
         """BM25 top-k [(doc_id, score)], tie-break score desc /
-        doc_id asc, sliced [offset, offset+k) — block-max WAND unless
-        tombstones force the exhaustive path (same rule as
-        PhysicalIndex.topk).  ``timeout_ms`` arms the kernel deadline
+        doc_id asc, sliced [offset, offset+k) — block-max WAND, with
+        tombstoned docs masked before the heap so pruning stays sound
+        under deletes.  ``timeout_ms`` arms the kernel deadline
         (raises :class:`QueryTimeout` past 75% of the budget).
         Repeated queries hit the result cache (a timed-out query
         caches nothing — only completed results enter)."""
         def compute():
             with _budget(timeout_ms):
                 terms = sorted(set(strip_stops(self.stats, qterms)))
-                if self._tomb is None:
-                    ids, scores = _wand_scan(
-                        self._blocks(terms), float(self.stats["n_docs"]),
-                        self.stats["avgdl"], self.stats["k1"],
-                        self.stats["b"], self.stats["block_range"],
-                        offset + k, len(terms), mode,
-                        min_match=min_match,
-                    )
-                else:
-                    ids, scores, nt = self._scored(terms)
-                    req = (len(terms) if mode == "and"
-                           else max(1, int(min_match or 1)))
-                    if req > 1:
-                        keep = nt >= req
-                        ids, scores = ids[keep], scores[keep]
-            order = np.lexsort((ids, -scores))[offset:offset + k]
-            return [(int(ids[i]), float(scores[i])) for i in order]
+                ids, scores = self._scored(
+                    terms, k=offset + k, n_terms=len(terms), mode=mode,
+                    min_match=min_match)
+            return [(int(d), float(x))
+                    for d, x in zip(ids[offset:], scores[offset:])]
 
         key = ("topk", tuple(qterms), int(k), mode, min_match,
                int(offset))
